@@ -145,19 +145,6 @@ def find_last_complete_checkpoint_before(
 # ---------------------------------------------------------------------------
 # Parquet read/write
 
-def _open_fs(path: str):
-    """Route parquet I/O through the right pyarrow filesystem: local paths
-    stay local; cloud URIs (s3://, gs://, ...) resolve via
-    pyarrow.fs.FileSystem.from_uri so checkpoints work against object
-    stores with the same code path."""
-    import pyarrow.fs as pafs
-
-    if "://" in path and not path.startswith("file://"):
-        fs, rel = pafs.FileSystem.from_uri(path)
-        return fs, rel
-    return pafs.LocalFileSystem(), path.replace("file://", "")
-
-
 def _row_to_action(row: dict) -> Action | None:
     """One checkpoint parquet row -> action (reference:
     checkpoint_reader.go:43-85).  commitInfo / cdc rows return None (they
@@ -261,29 +248,24 @@ class _RangedStoreFile:
         pass
 
 
-def _open_checkpoint_parquet(path: str, store: LogStore | None):
-    """ParquetFile over a checkpoint part, routed through the store's
-    cheapest streaming surface (ranged cloud GETs / one buffered download
-    for abstract stores / the local filesystem)."""
-    from delta_go_spark.store import LocalStore, LogStore as _Base
-
-    if store is not None and not isinstance(store, LocalStore):
-        if type(store).read_range is not _Base.read_range:
-            # Cloud store with a real ranged read: stream row groups
-            # through per-read GETs.
-            return pq.ParquetFile(
-                pa.PythonFile(_RangedStoreFile(store, path), mode="r")
-            )
-        # Custom store with only the abstract surface: its default
-        # read_range re-downloads the WHOLE object per read call —
-        # one buffered download is strictly better there.
-        return pq.ParquetFile(pa.BufferReader(store.read_bytes(path)))
-    # Local (or no store): stream from the file.
-    fs, rel = _open_fs(path)
-    return pq.ParquetFile(fs.open_input_file(rel))
+def _open_checkpoint_parquet(path: str, store: LogStore):
+    """ParquetFile over a checkpoint part.  pyarrow opens a plain local
+    path directly; a URI (a cloud store, or a store mapping its own
+    scheme onto local files) is read through the store — ranged reads
+    when it has them, otherwise one buffered download."""
+    if "://" not in path:
+        return pq.ParquetFile(path)
+    if type(store).read_range is not LogStore.read_range:
+        # ranged reads: stream footer + row groups, one read per call
+        return pq.ParquetFile(
+            pa.PythonFile(_RangedStoreFile(store, path), mode="r")
+        )
+    # only the abstract surface: its default read_range re-downloads the
+    # WHOLE object per call — one buffered download is strictly better
+    return pq.ParquetFile(pa.BufferReader(store.read_bytes(path)))
 
 
-def checkpoint_num_rows(paths: list[str], store: LogStore | None = None) -> int:
+def checkpoint_num_rows(paths: list[str], store: LogStore) -> int:
     """Total action rows across checkpoint parts from the parquet FOOTERS
     alone — an O(bytes-of-footer) upper bound on the table's active-file
     count (rows also cover removes/txns/protocol/metadata), used to route
@@ -296,7 +278,7 @@ def checkpoint_num_rows(paths: list[str], store: LogStore | None = None) -> int:
 
 def iter_checkpoint_actions(
     paths: list[str],
-    store: LogStore | None = None,
+    store: LogStore,
     batch_size: int = 10_000,
     columns: list[str] | None = None,
 ):
@@ -333,31 +315,6 @@ def iter_checkpoint_actions(
                 a = _row_to_action(row)
                 if a is not None:
                     yield a
-
-
-def iter_checkpoint_actions_pruned(
-    paths: list[str],
-    store: LogStore | None,
-    column: str,
-    batch_size: int = 10_000,
-):
-    """Actions of ONE top-level kind (e.g. 'txn', 'remove'): a readability
-    alias for the single-column projected read — parquet column pruning +
-    Arrow-side null drop both live in iter_checkpoint_actions, so there is
-    exactly one implementation of 'pruned checkpoint action read'."""
-    yield from iter_checkpoint_actions(
-        paths, store, batch_size=batch_size, columns=[column]
-    )
-
-
-def read_checkpoint_actions(
-    paths: list[str],
-    store: LogStore | None = None,
-    columns: list[str] | None = None,
-) -> list[Action]:
-    """Materialized variant of iter_checkpoint_actions (reverse P&M search
-    needs a concrete batch)."""
-    return list(iter_checkpoint_actions(paths, store, columns=columns))
 
 
 def _map_to_dict(v):
@@ -488,23 +445,11 @@ def _small_action_rows(
 
 
 def _emit_part(store: LogStore, tbl: pa.Table, target: str) -> None:
-    from delta_go_spark.store import LocalStore
-
-    if isinstance(store, LocalStore):
-        # Stream to a temp file + atomic rename — no in-memory copy of
-        # the serialized part.
-        import os
-
-        tmp = target + ".tmp"
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, target)
-    else:
-        # Object stores: serialize and hand bytes to the LogStore
-        # (single PUT, atomic at object level) — raw-path
-        # pq.write_table would crash cloud tables.
-        sink = pa.BufferOutputStream()
-        pq.write_table(tbl, sink)
-        store.write_bytes(target, sink.getvalue().to_pybytes(), overwrite=True)
+    """Serialize one checkpoint part and publish it through the log store —
+    the same atomic, durable write path as every other log file."""
+    sink = pa.BufferOutputStream()
+    pq.write_table(tbl, sink)
+    store.write_bytes(target, sink.getvalue().to_pybytes(), overwrite=True)
 
 
 def write_checkpoint(
@@ -537,9 +482,6 @@ def write_checkpoint(
         )
     table = pa.Table.from_pylist(rows, schema=CHECKPOINT_SCHEMA)
 
-    def emit(tbl: pa.Table, target: str) -> None:
-        _emit_part(store, tbl, target)
-
     # Multi-part when the state outgrows one comfortable parquet file
     # (reference reads multi-part checkpoints: checkpoint.go:214-245,
     # filename.go:73-79; at 100 TB a single file serializes the write and
@@ -552,9 +494,10 @@ def write_checkpoint(
         targets = filenames.checkpoint_file_parts(log_path, version, parts)
         per = -(-len(rows) // parts)
         for i, target in enumerate(targets):
-            emit(table.slice(i * per, per), target)
+            _emit_part(store, table.slice(i * per, per), target)
     else:
-        emit(table, filenames.checkpoint_file_single(log_path, version))
+        target = filenames.checkpoint_file_single(log_path, version)
+        _emit_part(store, table, target)
     meta = CheckpointMetadata(version=version, size=len(rows), parts=parts)
     payload = {"version": meta.version, "size": meta.size}
     if parts:

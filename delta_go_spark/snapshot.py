@@ -304,10 +304,12 @@ class Snapshot:
             # protocol/metaData rows, so read just those parquet columns —
             # never the add/remove payload (O(KB), not O(#files), on a
             # million-file checkpoint).
-            yield ckpt.read_checkpoint_actions(
-                list(self.segment.checkpoints),
-                self.store,
-                columns=["protocol", "metaData"],
+            yield list(
+                ckpt.iter_checkpoint_actions(
+                    list(self.segment.checkpoints),
+                    self.store,
+                    columns=["protocol", "metaData"],
+                )
             )
 
     def protocol(self) -> Protocol:
@@ -437,79 +439,6 @@ def _canonical_key_udf(table_root: str):
     return pandas_udf(_canon, "string")
 
 
-def active_files_df(spark, snapshot: "Snapshot"):
-    """Scale-path state reconstruction: the active-file set computed AS A
-    SPARK JOB instead of a driver-side Python fold.
-
-    For a 100 TB table the log tail is small but the checkpoint can carry
-    millions of AddFiles; this path reads the checkpoint parquet + tail
-    JSON commits with Spark, resolves newest-action-per-path with one
-    window (partitionBy path, orderBy version desc — the same
-    newest-wins/tombstone rule as replay_action.go:80-116), and returns a
-    DataFrame of active adds.  The driver never materializes the file list;
-    callers can aggregate (counts, total bytes) or join it distributively.
-
-    Equivalence with the Python fold is asserted in tests.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    seg = snapshot.segment
-    parts = []
-    if seg.checkpoints:
-        ck = (
-            spark.read.parquet(*[p for p in seg.checkpoints])
-            .select(
-                F.col("add.path").alias("path"),
-                F.col("add.size").alias("size"),
-                F.col("remove.path").alias("rm_path"),
-            )
-            .withColumn("version", F.lit(seg.checkpoint_version or -1).cast("long"))
-        )
-        parts.append(ck)
-    for path in seg.deltas:
-        v = int(os.path.basename(path).split(".")[0])
-        dj = (
-            spark.read.json(path)
-            .withColumn("version", F.lit(v).cast("long"))
-        )
-        cols = dj.columns
-        parts.append(
-            dj.select(
-                (F.col("add.path") if "add" in cols else F.lit(None)).alias("path"),
-                (F.col("add.size") if "add" in cols else F.lit(None).cast("long")).alias("size"),
-                (F.col("remove.path") if "remove" in cols else F.lit(None)).alias("rm_path"),
-                "version",
-            )
-        )
-    if not parts:
-        return spark.createDataFrame([], "path string, size long, version long")
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    canon = _canonical_key_udf(snapshot.table_root)
-    events = union.select(
-        F.coalesce("path", "rm_path").alias("path"),
-        "size",
-        "version",
-        F.col("path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    # newest version wins; within one version an add beats a remove
-    # (re-add-in-same-commit), matching the InMemoryLogReplay fold.  The
-    # window keys on the CANONICAL path so mixed spellings (relative
-    # percent-encoded add vs absolute remove) dedup exactly like the
-    # driver fold.
-    events = events.withColumn("_ckey", canon(F.col("path")))
-    w = Window.partitionBy("_ckey").orderBy(
-        F.desc("version"), F.desc("is_add")
-    )
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & F.col("is_add"))
-        .select("path", "size", "version")
-    )
-
-
 _ADD_STRUCT_DDL = (
     "struct<path:string,partitionValues:map<string,string>,size:bigint,"
     "modificationTime:bigint,dataChange:boolean,stats:string,"
@@ -519,15 +448,17 @@ _ADD_STRUCT_DDL = (
 
 def checkpoint_adds_df(spark, snapshot: "Snapshot"):
     """Active AddFiles with their COMPLETE action payload (partition
-    values, stats, tags), reconstructed as a Spark job — the checkpoint
-    writer's scale path.
+    values, stats, tags), reconstructed as a Spark job — the scale path
+    of state reconstruction, used by the distributed scan and the
+    checkpoint writer.
 
-    Same newest-wins/tombstone fold as :func:`active_files_df` (window
-    over path, version desc, add-beats-remove within a version —
-    replay_action.go:80-116), but carrying the full add struct in the
-    parquet checkpoint layout so the result can be written straight into
-    multi-part checkpoint files without the driver ever materializing
-    the file list.  JSON-sourced partitionValues/tags arrive as structs
+    The checkpoint parquet + tail JSON commits are read with Spark and
+    newest-action-per-path is resolved with one window (over the
+    canonical path, version desc, add-beats-remove within a version —
+    the newest-wins/tombstone rule of replay_action.go:80-116), carrying
+    the full add struct in the parquet checkpoint layout so the result
+    can be written straight into multi-part checkpoint files without the
+    driver ever materializing the file list.  JSON-sourced partitionValues/tags arrive as structs
     (Spark's JSON inference) and are converted to the checkpoint's
     map<string,string> form; checkpoint-sourced rows already match.
     """
@@ -615,7 +546,9 @@ def checkpoint_adds_df(spark, snapshot: "Snapshot"):
         "version",
         F.col("add.path").isNotNull().alias("is_add"),
     ).filter(F.col("path").isNotNull())
-    # Canonical replay key, matching the driver fold (see active_files_df).
+    # Canonical replay key, matching the driver fold: mixed spellings
+    # (relative percent-encoded add vs absolute remove) dedup exactly like
+    # InMemoryLogReplay.
     events = events.withColumn("_ckey", canon(F.col("path")))
     w = Window.partitionBy("_ckey").orderBy(F.desc("version"), F.desc("is_add"))
     return (
@@ -692,8 +625,8 @@ def set_transactions_lite(snapshot: "Snapshot") -> list[SetTransaction]:
     txns: dict[str, SetTransaction] = {}
     seg = snapshot.segment
     if seg.checkpoints:
-        for a in ckpt.iter_checkpoint_actions_pruned(
-            list(seg.checkpoints), snapshot.store, "txn"
+        for a in ckpt.iter_checkpoint_actions(
+            list(seg.checkpoints), snapshot.store, columns=["txn"]
         ):
             if isinstance(a, SetTransaction):
                 txns[a.app_id] = a
@@ -722,8 +655,8 @@ def tombstones_lite(
     seg = snapshot.segment
     root = snapshot.table_root
     if seg.checkpoints:
-        for a in ckpt.iter_checkpoint_actions_pruned(
-            list(seg.checkpoints), snapshot.store, "remove"
+        for a in ckpt.iter_checkpoint_actions(
+            list(seg.checkpoints), snapshot.store, columns=["remove"]
         ):
             if isinstance(a, RemoveFile) and (
                 (a.deletion_timestamp or 0) > min_file_retention_ts

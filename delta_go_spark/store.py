@@ -5,18 +5,19 @@
 2. mutual exclusion — exactly one writer may create a given version file;
 3. consistent listing after a write.
 
-Only the driver ever writes the log (executors write data files), so the
-single-process mutex + atomic-create pattern holds on a cluster exactly as
-it does locally.  Cloud backends (S3 If-None-Match, GCS generation
-preconditions, Azure ETag) implement the same ABC; LocalStore is the one
-shipped here (reference: store/local.go:73-96).
+LocalStore gets mutual exclusion from the filesystem itself: each write
+stages in its own uniquely named file and publishes it with os.link, which
+fails with EEXIST for every writer but the first — across threads AND
+processes, with no in-process lock (reference: store/local.go:73-96).
+Cloud backends (S3 If-None-Match, GCS generation preconditions, Azure
+ETag) implement the same ABC.
 """
 
 from __future__ import annotations
 
 import io
 import os
-import threading
+import uuid
 from abc import ABC, abstractmethod
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
@@ -136,10 +137,18 @@ class ChunkStream(io.RawIOBase):
 
 
 class LocalStore(LogStore):
-    """Local-filesystem store: write-temp + atomic link/rename for mutual
-    exclusion, plus a process-wide mutex (reference: store/local.go:73-96)."""
+    """Local-filesystem store (reference: store/local.go:73-96).
 
-    _mutex = threading.Lock()
+    Every write goes through `_publish`: the bytes land in a per-writer
+    staging file `.<name>.<uuid4>.tmp` next to the target, are fsynced,
+    and are published with os.link (create-if-absent: the one writer whose
+    link succeeds wins the version, every other one gets
+    FileAlreadyExistsError) or os.replace (overwrite).  No two writers
+    ever share a staging file, so the winner is picked by the filesystem,
+    across processes, not by an in-process mutex.  A crash between
+    staging and unlink can leave a hidden `.…tmp` file behind; readers
+    ignore it — the leading dot sorts before every log file name and
+    matches neither the delta nor the checkpoint file pattern."""
 
     def __init__(self, root_dir: str):
         self._root = os.path.abspath(root_dir)
@@ -165,39 +174,39 @@ class LocalStore(LogStore):
                     st = os.stat(full)
                     yield FileMeta(full, st.st_size, int(st.st_mtime * 1000))
             except FileNotFoundError:
-                # a concurrent writer's staging file (.tmp) can vanish
-                # between listdir and stat — it was never a log file;
-                # propagating would masquerade as an empty/missing log.
+                # a concurrent writer's staging file can vanish between
+                # listdir and stat — it was never a log file; propagating
+                # would masquerade as an empty/missing log.
                 continue
 
-    def write(self, path: str, lines: Iterable[str], overwrite: bool = False) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        data = "".join(line + "\n" for line in lines).encode("utf-8")
-        with LocalStore._mutex:
-            tmp = path + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(data)
+    def _publish(self, path: str, chunks: Iterable[bytes], overwrite: bool) -> None:
+        parent, name = os.path.split(path)
+        os.makedirs(parent, exist_ok=True)
+        tmp = os.path.join(parent, f".{name}.{uuid.uuid4().hex}.tmp")
+        try:
+            # "x": the name is this writer's alone; open() still applies
+            # the umask to the file mode, unlike mkstemp's fixed 0600
+            with open(tmp, "xb") as f:
+                for c in chunks:
+                    f.write(c)
                 f.flush()
                 os.fsync(f.fileno())
+            if overwrite:
+                os.replace(tmp, path)
+            else:
+                try:
+                    os.link(tmp, path)  # EEXIST: another writer won
+                except FileExistsError as e:
+                    raise FileAlreadyExistsError(path) from e
+        finally:
             try:
-                if overwrite:
-                    os.replace(tmp, path)
-                else:
-                    try:
-                        # link() fails with EEXIST if the target exists —
-                        # atomic create-if-absent on POSIX.
-                        os.link(tmp, path)
-                    except FileExistsError as e:
-                        raise FileAlreadyExistsError(path) from e
-                    finally:
-                        if os.path.exists(tmp):
-                            os.unlink(tmp)
-            finally:
-                if os.path.exists(tmp):
-                    try:
-                        os.unlink(tmp)
-                    except OSError:
-                        pass
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass  # os.replace already consumed it
+
+    def write(self, path: str, lines: Iterable[str], overwrite: bool = False) -> None:
+        data = "".join(line + "\n" for line in lines).encode("utf-8")
+        self._publish(path, (data,), overwrite)
 
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
@@ -207,22 +216,7 @@ class LocalStore(LogStore):
             return f.read()
 
     def write_bytes(self, path: str, data: bytes, overwrite: bool = True) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-            f.flush()
-            os.fsync(f.fileno())
-        if overwrite:
-            os.replace(tmp, path)
-        else:
-            try:
-                os.link(tmp, path)
-            except FileExistsError as e:
-                raise FileAlreadyExistsError(path) from e
-            finally:
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
+        self._publish(path, (data,), overwrite)
 
     def delete(self, path: str) -> None:
         try:
@@ -233,23 +227,7 @@ class LocalStore(LogStore):
     def write_stream(
         self, path: str, chunks: Iterable[bytes], overwrite: bool = True
     ) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            for c in chunks:
-                f.write(c)
-            f.flush()
-            os.fsync(f.fileno())
-        if overwrite:
-            os.replace(tmp, path)
-        else:
-            try:
-                os.link(tmp, path)
-            except FileExistsError as e:
-                raise FileAlreadyExistsError(path) from e
-            finally:
-                if os.path.exists(tmp):
-                    os.unlink(tmp)
+        self._publish(path, chunks, overwrite)
 
     def read_range(self, path: str, start: int, length: int) -> bytes:
         with open(path, "rb") as f:

@@ -443,6 +443,28 @@ QUERIES["streaming_interval_join_events"] = (
 )
 
 
+def _isolated_stream_session(spark):
+    """A new session over the shared context (own SQL conf) whose shuffle
+    and state-store width is SPARK_GRAFT_STREAM_STATE_PARTITIONS (default
+    4): streams whose key space is fixed by the query, not the data, size
+    their partitions to it without touching the parent session's width."""
+    import os
+
+    raw = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer > 0, "
+            f"got {raw!r}"
+        )
+    ns = spark.newSession()
+    ns.conf.set("spark.sql.shuffle.partitions", str(n))
+    return ns
+
+
 # ---------------------------------------------------------------------------
 # Stream-static enrichment join: the canonical Structured Streaming lookup
 # pattern — a streaming fact joined to a STATIC dimension (broadcast into
@@ -465,14 +487,8 @@ def streaming_static_enrich_events(spark, sf_dir: str) -> DataFrame:
     # a scale-independent property — leaving the parent session's batch
     # shuffle parallelism untouched.  Deployments with genuinely large
     # key spaces size it via SPARK_GRAFT_STREAM_STATE_PARTITIONS.
-    import os as _os
-
-    ns = spark.newSession()
+    ns = _isolated_stream_session(spark)
     ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ns.conf.set(
-        "spark.sql.shuffle.partitions",
-        _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"),
-    )
     schema = ns.read.parquet(path).schema
     stream = (
         ns.readStream.schema(schema)
@@ -781,11 +797,7 @@ def streaming_delta_aggsink_events(spark, sf_dir: str) -> DataFrame:
     # session's batch parallelism untouched.  Real deployments with wide
     # key spaces size it via SPARK_GRAFT_STREAM_STATE_PARTITIONS.  The
     # result is partitioning-independent (additive integer merge).
-    ns = spark.newSession()
-    ns.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"),
-    )
+    ns = _isolated_stream_session(spark)
     seed = ns.createDataFrame(
         [], "event_type string, n_events long, value_cents long"
     )

@@ -443,35 +443,29 @@ class OptimisticTransaction:
                 return True
         return False
 
-    def _use_distributed_checkpoint(self, n_files: int) -> bool:
+    def _use_distributed_checkpoint(self, spark, snap) -> bool:
         """Route the checkpoint through the Spark-job multi-part writer
-        when the active-file count crosses the configured threshold
-        (spark.delta_go.checkpoint.distributedFileThreshold, default
-        200k) — a million-add pyarrow table on the driver is the scale
-        ceiling this avoids.  Requires a live session and a log Spark
-        itself can read (local path or native-capable cloud; never a
-        register_store-bound fake)."""
-        from pyspark.sql import SparkSession
+        when the snapshot's file count reaches the distributed-state
+        threshold (spark.delta_go.state.distributedFileThreshold; <= 0
+        disables the Spark tier) — a million-add pyarrow table on the
+        driver is the scale ceiling this avoids.  The count is the folded
+        state's when one exists, else the footer-based upper bound, so an
+        unfolded snapshot is never folded just to decide.  Requires a
+        live session and a log Spark itself can read (local path or
+        native-capable cloud; never a register_store-bound fake)."""
+        from delta_go_spark.snapshot import (
+            distributed_state_threshold,
+            spark_can_read_log,
+        )
 
-        from delta_go_spark.snapshot import spark_can_read_log
-
-        spark = SparkSession.getActiveSession()
         if spark is None:
             return False
-        try:
-            threshold = int(
-                spark.conf.get(
-                    "spark.delta_go.checkpoint.distributedFileThreshold",
-                    "200000",
-                )
-            )
-        except Exception:
-            threshold = 200_000
-        if n_files < max(1, threshold):
+        threshold = distributed_state_threshold(spark)
+        if threshold <= 0 or not spark_can_read_log(spark, self.log.log_path):
             return False
-        # Single source of truth for "may Spark executors read this log?"
-        # — shared with the distributed state tier (snapshot.py).
-        return spark_can_read_log(spark, self.log.log_path)
+        if snap._state is not None:
+            return len(snap._state.active_files) >= threshold
+        return snap.estimated_file_count() >= threshold
 
     def _post_commit(self, version: int) -> None:
         """Checkpoint every checkpointInterval commits
@@ -495,17 +489,26 @@ class OptimisticTransaction:
             from delta_go_spark.snapshot import (
                 set_transactions_lite,
                 tombstones_lite,
-                use_distributed_state,
             )
 
             spark = SparkSession.getActiveSession()
-            # Fully distributed tier: above the state threshold the driver
-            # never folds — protocol/metadata come from the column-
-            # projected reverse replay, txn/tombstone state from the lite
-            # folds, adds from the Spark reconstruction inside the writer.
-            if use_distributed_state(spark, target) and self._use_distributed_checkpoint(
-                target.estimated_file_count()
-            ):
+            if self._use_distributed_checkpoint(spark, target):
+                # Above the threshold the driver never folds: txn/tombstone
+                # state comes from the folded state when one already
+                # exists, else from the lite folds; protocol/metadata from
+                # the column-projected reverse replay; adds from the Spark
+                # reconstruction inside the writer.
+                st = target._state
+                if st is not None:
+                    txns = list(st.set_transactions.values())
+                    tombs = list(st.tombstones.values())
+                    n_adds = len(st.active_files)
+                else:
+                    txns = set_transactions_lite(target)
+                    tombs = tombstones_lite(target)
+                    # the upper-bound estimate sizes the parts; the writer
+                    # records the exact count from the part footers
+                    n_adds = target.estimated_file_count()
                 ckpt_mod.write_checkpoint_spark(
                     spark,
                     self.log.store,
@@ -514,28 +517,12 @@ class OptimisticTransaction:
                     target,
                     target.protocol(),
                     target.metadata(),
-                    set_transactions_lite(target),
-                    tombstones_lite(target),
-                    # upper-bound estimate sizes the parts; the writer
-                    # records the exact count from the part footers
-                    n_adds=target.estimated_file_count(),
-                )
-            elif self._use_distributed_checkpoint(
-                len((st := target.state()).active_files)
-            ):
-                ckpt_mod.write_checkpoint_spark(
-                    spark,
-                    self.log.store,
-                    self.log.log_path,
-                    version,
-                    target,
-                    st.protocol,
-                    st.metadata,
-                    list(st.set_transactions.values()),
-                    list(st.tombstones.values()),
-                    n_adds=len(st.active_files),
+                    txns,
+                    tombs,
+                    n_adds=n_adds,
                 )
             else:
+                st = target.state()
                 ckpt_mod.write_checkpoint(
                     self.log.store,
                     self.log.log_path,

@@ -25,16 +25,12 @@ from delta_go_spark.snapshot import (
 )
 from delta_go_spark.table import DeltaTable
 
-CKPT_THRESHOLD_CONF = "spark.delta_go.checkpoint.distributedFileThreshold"
-
 
 @pytest.fixture
 def low_thresholds(spark):
     spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "5")
-    spark.conf.set(CKPT_THRESHOLD_CONF, "5")
     yield
     spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "200000")
-    spark.conf.set(CKPT_THRESHOLD_CONF, "200000")
 
 
 def _partitioned_table(spark, tmp_path, name, n_appends=9):
@@ -162,13 +158,13 @@ def test_pm_resolution_reads_only_pm_columns(spark, tmp_path, monkeypatch):
     t.delete(EqualTo(Column("p", LongType()), Literal(5)))  # checkpoint @10
 
     seen = []
-    orig = ckpt_mod.read_checkpoint_actions
+    orig = ckpt_mod.iter_checkpoint_actions
 
-    def spy(paths, store=None, columns=None):
+    def spy(paths, store, batch_size=10_000, columns=None):
         seen.append(columns)
-        return orig(paths, store, columns=columns)
+        return orig(paths, store, batch_size, columns=columns)
 
-    monkeypatch.setattr(ckpt_mod, "read_checkpoint_actions", spy)
+    monkeypatch.setattr(ckpt_mod, "iter_checkpoint_actions", spy)
     snap = DeltaLog.for_table(path).update()
     assert snap.segment.checkpoints  # anchored on the new checkpoint
     # force the reverse P&M replay to reach the checkpoint batch: the
@@ -187,7 +183,7 @@ def test_distributed_fold_dedups_on_canonical_path(spark, tmp_path):
     import json as _json
 
     from delta_go_spark.log import DeltaLog
-    from delta_go_spark.snapshot import active_files_df, checkpoint_adds_df
+    from delta_go_spark.snapshot import checkpoint_adds_df
 
     root = str(tmp_path / "mixed")
     log_dir = tmp_path / "mixed" / "_delta_log"
@@ -249,9 +245,7 @@ def test_distributed_fold_dedups_on_canonical_path(spark, tmp_path):
     snap = DeltaLog.for_table(root).snapshot()
     # driver fold: one survivor
     assert sorted(a.path for a in snap.all_files()) == ["keep.parquet"]
-    # distributed folds must agree
-    df_paths = sorted(r["path"] for r in active_files_df(spark, snap).collect())
-    assert df_paths == ["keep.parquet"]
+    # the distributed fold must agree
     ck_paths = sorted(
         r["path"] for r in checkpoint_adds_df(spark, snap).select("add.path").collect()
     )

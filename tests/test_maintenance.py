@@ -330,16 +330,16 @@ def test_distributed_checkpoint_survives_inflated_estimate(spark, tmp_path):
 
 
 def test_distributed_checkpoint_threshold_wiring(spark, tmp_path):
-    """Above spark.delta_go.checkpoint.distributedFileThreshold the
+    """At or above spark.delta_go.state.distributedFileThreshold the
     postCommit checkpoint goes through the Spark-job writer (multi-part
     group appears at the checkpointInterval boundary)."""
     import os
 
+    from delta_go_spark.snapshot import DISTRIBUTED_STATE_THRESHOLD_CONF
+
     path = str(tmp_path / "dckpt2")
-    old = spark.conf.get(
-        "spark.delta_go.checkpoint.distributedFileThreshold", None
-    )
-    spark.conf.set("spark.delta_go.checkpoint.distributedFileThreshold", "1")
+    old = spark.conf.get(DISTRIBUTED_STATE_THRESHOLD_CONF, None)
+    spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "1")
     try:
         DeltaTable.create(
             spark,
@@ -352,11 +352,9 @@ def test_distributed_checkpoint_threshold_wiring(spark, tmp_path):
         t.append(spark.range(20, 30).select(F.col("id").alias("k")))
     finally:
         if old is None:
-            spark.conf.unset("spark.delta_go.checkpoint.distributedFileThreshold")
+            spark.conf.unset(DISTRIBUTED_STATE_THRESHOLD_CONF)
         else:
-            spark.conf.set(
-                "spark.delta_go.checkpoint.distributedFileThreshold", old
-            )
+            spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, old)
     names = os.listdir(os.path.join(path, "_delta_log"))
     multi = [n for n in names if ".checkpoint.0000000" in n]
     assert multi, names  # multi-part group written at version 2

@@ -100,7 +100,7 @@ def test_softdedup_sub_cc_sizes_broadcast(spark):
     assert plan.count("SortMergeJoin") <= 1, plan
 
 
-def test_streaming_aggsink_shuffle_width_bounded(spark):
+def test_streaming_aggsink_shuffle_width_bounded(spark, monkeypatch):
     """r14: the aggsink's per-batch aggregate + MERGE run in an isolated
     session whose shuffle width is sized to the key cardinality (default
     4, env-overridable), not one partition per core — each of the 4
@@ -109,12 +109,34 @@ def test_streaming_aggsink_shuffle_width_bounded(spark):
     untouched, and the additive fold must still match the oracle (the
     result is partitioning-independent)."""
     from delta_go_spark.queries import queries
+    from delta_go_spark.streaming import windows
 
+    sessions = []
+    orig = windows._isolated_stream_session
+
+    def spy(parent):
+        sessions.append(orig(parent))
+        return sessions[-1]
+
+    monkeypatch.setattr(windows, "_isolated_stream_session", spy)
     parent_parts = spark.conf.get("spark.sql.shuffle.partitions")
     df = queries()["streaming_delta_aggsink_events"](spark, SF_DIR)
+    assert len(sessions) == 1
+    assert sessions[0].conf.get("spark.sql.shuffle.partitions") == "4"
     assert spark.conf.get("spark.sql.shuffle.partitions") == parent_parts
     rows = {r["event_type"]: r["n_events"] for r in df.collect()}
     assert rows and all(n > 0 for n in rows.values())
+
+
+@pytest.mark.parametrize("raw", ["0", "four"])
+def test_stream_state_partitions_env_validated(spark, monkeypatch, raw):
+    """SPARK_GRAFT_STREAM_STATE_PARTITIONS must be an integer > 0; a bad
+    value fails loudly, naming the variable, before any session exists."""
+    from delta_go_spark.streaming.windows import _isolated_stream_session
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
+        _isolated_stream_session(spark)
 
 
 def test_streaming_static_enrich_state_partitions_bounded(spark):

@@ -176,11 +176,13 @@ def test_active_files_df_matches_python_fold(spark, name):
     """The Spark-job state reconstruction (scale path) must agree with the
     driver-side Python fold on every golden log shape: checkpoint-anchored,
     checkpoint+tail, re-add, deletes."""
-    from delta_go_spark.snapshot import active_files_df
+    from delta_go_spark.snapshot import checkpoint_adds_df
 
     snap = DeltaLog.for_table(golden(name)).snapshot()
     py_paths = sorted(a.path for a in snap.all_files())
-    df_paths = sorted(r["path"] for r in active_files_df(spark, snap).collect())
+    df_paths = sorted(
+        r["path"] for r in checkpoint_adds_df(spark, snap).select("add.path").collect()
+    )
     assert df_paths == py_paths
 
 

@@ -355,3 +355,168 @@ def test_metadata_only_schema_swap_conflicts_with_concurrent_append(tmp_path):
     loser.update_metadata(Metadata(schema_string=INCOMPATIBLE_SCHEMA))
     with pytest.raises(ConcurrentAppendError):
         loser.commit([], ops.MANUAL_UPDATE)  # metadata-only commit
+
+
+def _mp_writer(table, wid, n_appends, pair_at, start, pair_barrier, results):
+    """One writer process: `n_appends` blind one-file appends into
+    partition x=0, started together with the other writers; the two pair
+    writers also run one read-then-append on partition x=1 after
+    `pair_at` appends, both reading before either commits (the barrier).
+    Every outcome is reported, never raised."""
+    log = DeltaLog.for_table(table)
+    start.wait(timeout=120)
+    committed, errors, pair = [], [], None
+    for i in range(n_appends):
+        if i == pair_at and pair_barrier is not None:
+            path = f"pair-{wid}"
+            try:
+                txn = log.start_transaction()
+                txn.mark_files_as_read(EqualTo(Column("x", IntegerType()), Literal(1)))
+                pair_barrier.wait(timeout=120)
+                txn.commit([add(path, x="1")], ops.WRITE)
+                pair = ("committed", path)
+            except Exception as e:
+                pair = (type(e).__name__, str(e))
+        path = f"w{wid}-{i}"
+        try:
+            log.start_transaction().commit([add(path, x="0")], ops.WRITE)
+            committed.append(path)
+        except Exception as e:
+            errors.append((path, type(e).__name__, str(e)))
+    results.put({"wid": wid, "committed": committed, "errors": errors, "pair": pair})
+
+
+def test_multiprocess_writers_one_winner_per_version(tmp_path):
+    """4 writer PROCESSES race on one LocalStore table: 15 blind appends
+    each, plus one overlapping read-then-append pair.  Every blind append
+    commits, exactly one of the pair commits and the other raises
+    ConcurrentAppendError, every version file holds exactly one
+    transaction, and no add is committed twice (the storage contract's
+    mutual exclusion must hold across processes, not just threads)."""
+    import multiprocessing
+    import os
+
+    from delta_go_spark import filenames
+
+    n_workers, n_appends = 4, 15
+    table = new_table(tmp_path, partitioned=True).table_path
+    # spawn, not fork: the test process may hold a py4j gateway
+    ctx = multiprocessing.get_context("spawn")
+    start, pair_barrier = ctx.Barrier(n_workers), ctx.Barrier(2)
+    results = ctx.Queue()
+    procs = [
+        ctx.Process(
+            target=_mp_writer,
+            args=(table, w, n_appends, n_appends // 2, start,
+                  pair_barrier if w < 2 else None, results),
+        )
+        for w in range(n_workers)
+    ]
+    for p in procs:
+        p.start()
+    try:
+        reports = [results.get(timeout=300) for _ in procs]
+    finally:
+        for p in procs:
+            p.join(timeout=60)
+            if p.is_alive():  # pragma: no cover - only on a hang
+                p.kill()
+    assert [p.exitcode for p in procs] == [0] * n_workers
+    errors = [e for r in reports for e in r["errors"]]
+    assert not errors, (
+        f"{len(errors)} of {n_workers * n_appends} blind appends failed",
+        sorted({e[1] for e in errors}),
+        errors[:2],
+    )
+    pair = sorted(r["pair"][0] for r in reports if r["pair"] is not None)
+    assert pair == ["ConcurrentAppendError", "committed"], [r["pair"] for r in reports]
+    committed = [p for r in reports for p in r["committed"]]
+    committed += [r["pair"][1] for r in reports if r["pair"] and r["pair"][0] == "committed"]
+    assert len(committed) == n_workers * n_appends + 1
+
+    log_path = os.path.join(table, "_delta_log")
+    names = sorted(os.listdir(log_path))
+    assert not [n for n in names if n.endswith(".tmp")], names
+    versions = [filenames.delta_version(n) for n in names if filenames.is_delta_file(n)]
+    assert versions == list(range(len(committed) + 1))
+    logged_adds = []
+    for v in versions:
+        with open(filenames.delta_file(log_path, v), encoding="utf-8") as f:
+            actions = [json.loads(line) for line in f if line.strip()]
+        assert sum("commitInfo" in a for a in actions) == 1, (v, actions)
+        logged_adds += [a["add"]["path"] for a in actions if "add" in a]
+    assert len(logged_adds) == len(set(logged_adds))
+    assert sorted(logged_adds) == sorted(committed)
+    snap = DeltaLog.for_table(table).update()
+    assert {a.path for a in snap.all_files()} == set(committed)
+
+
+def test_checkpoint_through_uri_mapping_local_store(tmp_path):
+    """A LocalStore subclass that maps a URI prefix onto a local directory
+    (a viewfs-style mount): the checkpoint at checkpointInterval must be
+    written and read through the store, never handed to pyarrow as a raw
+    URI — otherwise the commit of the checkpoint version, already durable
+    in the log, is reported as failed."""
+    import os
+
+    from delta_go_spark import filenames
+    from delta_go_spark.store import FileMeta, LocalStore
+
+    class MappedStore(LocalStore):
+        def __init__(self, prefix, local_root):
+            super().__init__(local_root)
+            self._prefix = prefix
+            self._local = os.path.abspath(local_root)
+
+        def _to_local(self, path):
+            assert path.startswith(self._prefix), path
+            return self._local + path[len(self._prefix):]
+
+        def read(self, path):
+            return super().read(self._to_local(path))
+
+        def list_from(self, path):
+            for m in super().list_from(self._to_local(path)):
+                uri = self._prefix + m.path[len(self._local):]
+                yield FileMeta(uri, m.size, m.modification_time)
+
+        def write(self, path, lines, overwrite=False):
+            return super().write(self._to_local(path), lines, overwrite)
+
+        def exists(self, path):
+            return super().exists(self._to_local(path))
+
+        def read_bytes(self, path):
+            return super().read_bytes(self._to_local(path))
+
+        def write_bytes(self, path, data, overwrite=True):
+            return super().write_bytes(self._to_local(path), data, overwrite)
+
+        def delete(self, path):
+            return super().delete(self._to_local(path))
+
+        def read_range(self, path, start, length):
+            return super().read_range(self._to_local(path), start, length)
+
+        def size_of(self, path):
+            return super().size_of(self._to_local(path))
+
+    local_root = tmp_path / "mount"
+    store = MappedStore("mapfs://ns/data", str(local_root))
+    table = "mapfs://ns/data/t"
+    log = DeltaLog(table, store=store)
+    txn = log.start_transaction()
+    m = meta(False)
+    m.configuration = {"delta.checkpointInterval": "2"}
+    txn.update_metadata(m)
+    txn.commit([], ops.CREATE_TABLE)
+    assert log.start_transaction().commit([add("a")], ops.WRITE) == 1
+    assert log.start_transaction().commit([add("b")], ops.WRITE) == 2
+    assert os.path.isfile(
+        filenames.checkpoint_file_single(str(local_root / "t" / "_delta_log"), 2)
+    )
+    snap = DeltaLog(table, store=store).update()
+    assert snap.version == 2
+    assert snap.segment.checkpoint_version == 2
+    assert not snap.segment.deltas  # state comes from the checkpoint alone
+    assert {a.path for a in snap.all_files()} == {"a", "b"}
