@@ -1,10 +1,24 @@
 """Parquet checkpoints: _last_checkpoint discovery, complete-checkpoint
 selection, columnar read/write via pyarrow.
 
+Reading: iter_checkpoint_actions streams one Arrow batch at a time and
+decodes it column-wise.  The add and remove structs (the O(table)
+columns) are never turned into per-row dicts: each struct's null rows are
+dropped in Arrow, each child column is looked up by name and converted to
+Python once (maps from their offsets and flattened keys/items), and the
+actions are built by index.  The few metaData / protocol / txn rows keep
+per-row constructors.  Actions come out in parquet row order, and memory
+is bounded by one batch.  Full and column-projected reads share the one
+decoder.
+
+Writing: a SINGLE parquet file (or a multi-part group) with the fixed
+nested action schema — pyarrow gives byte-level control that
+df.write.parquet (part-files + _SUCCESS) does not.  Tombstones carry the
+protocol's extendedFileMetadata / partitionValues / size, so a remove
+folded from a checkpoint keeps them, as one folded from JSON does.
+
 Reference: checkpoint.go (metadata + discovery), checkpoint_reader.go:87-216
-(the fixed nested action schema), checkpoint_writer.go:19-94.  The writer
-must emit a SINGLE parquet file with that exact schema — pyarrow gives
-byte-level control that df.write.parquet (part-files + _SUCCESS) does not.
+(the fixed nested action schema), checkpoint_writer.go:19-94.
 """
 
 from __future__ import annotations
@@ -14,6 +28,7 @@ import time
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from delta_go_spark import filenames
@@ -146,30 +161,10 @@ def find_last_complete_checkpoint_before(
 # Parquet read/write
 
 def _row_to_action(row: dict) -> Action | None:
-    """One checkpoint parquet row -> action (reference:
-    checkpoint_reader.go:43-85).  commitInfo / cdc rows return None (they
-    don't contribute to state, matching the reference's fold)."""
-    if row.get("add") is not None:
-        a = row["add"]
-        return AddFile(
-            path=a["path"],
-            partition_values=_map_to_dict(a.get("partitionValues")),
-            size=a.get("size") or 0,
-            modification_time=a.get("modificationTime") or 0,
-            data_change=bool(a.get("dataChange")),
-            stats=a.get("stats"),
-            tags=_map_to_dict(a.get("tags")) or None,
-        )
-    if row.get("remove") is not None:
-        r = row["remove"]
-        return RemoveFile(
-            path=r["path"],
-            deletion_timestamp=r.get("deletionTimestamp"),
-            data_change=bool(r.get("dataChange")),
-            extended_file_metadata=bool(r.get("extendedFileMetadata", False)),
-            partition_values=_map_to_dict(r.get("partitionValues")) or None,
-            size=r.get("size"),
-        )
+    """One metaData / protocol / txn checkpoint row -> action (reference:
+    checkpoint_reader.go:43-85).  These rows are O(1) + O(#apps) per
+    checkpoint, so they keep a per-row constructor; add and remove rows
+    are built column-wise by _decode_batch."""
     if row.get("metaData") is not None:
         m = row["metaData"]
         fmt = m.get("format") or {}
@@ -282,39 +277,179 @@ def iter_checkpoint_actions(
     batch_size: int = 10_000,
     columns: list[str] | None = None,
 ):
-    """Stream checkpoint actions row-group-batch by batch — the memory
-    ceiling is one arrow batch, never the whole checkpoint (mirrors the
-    reference's streaming replay, replay_file.go:70-140).  Cloud stores
-    stream through ranged GETs (_RangedStoreFile); local tables stream
-    from the filesystem — neither path materializes a multi-GB checkpoint
-    as one bytes object on the driver.
+    """Stream checkpoint actions, one Arrow batch at a time, decoded
+    column-wise.
+
+    Order: parts in the order given, and within a part the parquet row
+    order — exactly the row-wise replay order of the reference
+    (replay_file.go:70-140).  A row carrying more than one action column
+    yields one action, with add > remove > metaData > protocol > txn
+    precedence; commitInfo / cdc / unknown columns are never read.
+
+    Memory: the ceiling is one Arrow batch plus the actions decoded from
+    it, never the whole checkpoint.  Cloud stores stream through ranged
+    GETs (_RangedStoreFile); local tables stream from the filesystem.
 
     `columns` projects top-level action columns (parquet column pruning):
     a caller that only needs protocol/metadata/txn rows reads those
-    columns' pages only, never the add/remove payload — the difference
-    between O(KB) and O(checkpoint) I/O on a million-file table."""
-    import pyarrow.compute as pc
-
+    columns' pages only, never the add/remove payload — O(KB) instead of
+    O(checkpoint) I/O on a million-file table.  Full and projected reads
+    share one decoder (_decode_batch), which drops each column's null rows
+    in Arrow before building any Python object."""
+    wanted = _ACTION_COLUMNS if columns is None else columns
     for path in paths:
         pf = _open_checkpoint_parquet(path, store)
         avail = set(pf.schema_arrow.names)
-        cols = [c for c in columns if c in avail] if columns is not None else None
-        if columns is not None and not cols:
+        cols = [c for c in wanted if c in avail]
+        if not cols:
             continue
         for batch in pf.iter_batches(batch_size, columns=cols):
-            if cols is not None:
-                # Projected read: drop rows where every projected column is
-                # null BEFORE building Python objects — a P&M resolution
-                # over a million-add checkpoint must not allocate ~1M empty
-                # dicts (the I/O is already pruned; this prunes the CPU).
-                keep = pc.is_valid(batch.column(0))
-                for c in range(1, batch.num_columns):
-                    keep = pc.or_(keep, pc.is_valid(batch.column(c)))
-                batch = batch.filter(keep)
-            for row in batch.to_pylist():
-                a = _row_to_action(row)
-                if a is not None:
-                    yield a
+            yield from _decode_batch(batch)
+
+
+# Decode precedence, lowest first: a later column overwrites an earlier one
+# in the same row (add > remove > metaData > protocol > txn).
+_ACTION_COLUMNS = ["txn", "protocol", "metaData", "remove", "add"]
+_SMALL_COLUMNS = ["txn", "protocol", "metaData"]
+
+
+def _decode_batch(batch: pa.RecordBatch) -> list[Action]:
+    """One Arrow batch -> its actions, in row order.
+
+    add and remove (the O(table) columns) are decoded child column by
+    child column: each struct's null rows are dropped first, each child
+    is looked up by name (so a foreign writer's field order, missing
+    optional fields and extra fields — deletionVector, stats_parsed —
+    are all handled) and converted to Python once.  The few metaData /
+    protocol / txn rows go through _row_to_action."""
+    names = batch.schema.names
+    # (valid-row mask, actions) per column group, lowest precedence first
+    groups: list[tuple] = []
+    small = [c for c in _SMALL_COLUMNS if c in names]
+    if small:
+        keep, rows = _valid_rows(batch.select(small))
+        groups.append((keep, [_row_to_action(row) for row in rows.to_pylist()]))
+    if "remove" in names:
+        keep, r = _valid_rows(batch.column("remove"))
+        groups.append((keep, [
+            RemoveFile(
+                path=path,
+                deletion_timestamp=ts,
+                data_change=bool(dc),
+                extended_file_metadata=bool(ext),
+                partition_values=pv or None,
+                size=size,
+            )
+            for path, ts, dc, ext, pv, size in zip(
+                _child_values(r, "path"),
+                _child_values(r, "deletionTimestamp"),
+                _child_values(r, "dataChange"),
+                _child_values(r, "extendedFileMetadata"),
+                _child_maps(r, "partitionValues"),
+                _child_values(r, "size"),
+            )
+        ]))
+    if "add" in names:
+        keep, a = _valid_rows(batch.column("add"))
+        groups.append((keep, [
+            AddFile(
+                path=path,
+                partition_values=pv,
+                size=size or 0,
+                modification_time=mtime or 0,
+                data_change=bool(dc),
+                stats=stats,
+                tags=tags or None,
+            )
+            for path, pv, size, mtime, dc, stats, tags in zip(
+                _child_values(a, "path"),
+                _child_maps(a, "partitionValues"),
+                _child_values(a, "size"),
+                _child_values(a, "modificationTime"),
+                _child_values(a, "dataChange"),
+                _child_values(a, "stats"),
+                _child_maps(a, "tags"),
+            )
+        ]))
+    groups = [g for g in groups if g[1]]
+    if len(groups) == 1:
+        return groups[0][1]  # already in row order
+    out: list[Action | None] = [None] * batch.num_rows
+    for keep, actions in groups:
+        idx = (
+            range(len(out)) if keep is None else pc.indices_nonzero(keep).to_pylist()
+        )
+        for i, action in zip(idx, actions):
+            out[i] = action
+    return [x for x in out if x is not None]
+
+
+def _valid_rows(arr):
+    """(mask, rows) of a struct array or record batch with its all-null
+    rows dropped; the mask is None when no row was dropped."""
+    if isinstance(arr, pa.RecordBatch):
+        keep = arr.column(0).is_valid()
+        for c in arr.columns[1:]:
+            keep = pc.or_(keep, c.is_valid())
+    elif arr.null_count == 0:
+        return None, arr
+    else:
+        keep = arr.is_valid()
+    return keep, arr.filter(keep)
+
+
+def _child(struct: pa.StructArray, name: str):
+    i = struct.type.get_field_index(name)
+    return struct.field(i) if i >= 0 else None
+
+
+def _child_values(struct: pa.StructArray, name: str) -> list:
+    """A scalar child as a Python list; an absent field reads as all null
+    (a missing `path` raises, as a row-wise `a["path"]` would)."""
+    child = _child(struct, name)
+    if child is None:
+        if name == "path":
+            raise KeyError(name)
+        return [None] * len(struct)
+    return _pylist(child)
+
+
+def _pylist(arr: pa.Array) -> list:
+    """arr.to_pylist(), through numpy where that gives the same Python
+    values about 10x faster: strings and bools (a null reads as None),
+    and integers without nulls (numpy would turn a null into NaN)."""
+    t = arr.type
+    if (
+        pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_boolean(t)
+        or (pa.types.is_integer(t) and arr.null_count == 0)
+    ):
+        return arr.to_numpy(zero_copy_only=False).tolist()
+    return arr.to_pylist()
+
+
+def _child_maps(struct: pa.StructArray, name: str) -> list[dict]:
+    """A map<string,string> child as one dict per row, from its offsets
+    and flattened keys/items; a null slot, an empty map and an absent
+    field all read as {}."""
+    m = _child(struct, name)
+    if m is None:
+        return [{} for _ in range(len(struct))]
+    offs = _pylist(m.offsets)
+    lo, hi = offs[0], offs[-1]
+    keys = _pylist(m.keys.slice(lo, hi - lo))
+    items = _pylist(m.items.slice(lo, hi - lo))
+    out = [
+        dict(zip(keys[a - lo : b - lo], items[a - lo : b - lo])) if b > a else {}
+        for a, b in zip(offs, offs[1:])
+    ]
+    if m.null_count:
+        # a null slot reads as {} whatever its offsets span
+        for i, ok in enumerate(_pylist(m.is_valid())):
+            if not ok:
+                out[i] = {}
+    return out
 
 
 def _map_to_dict(v):
@@ -360,6 +495,9 @@ CHECKPOINT_SCHEMA = pa.schema(
                     pa.field("path", pa.string()),
                     pa.field("deletionTimestamp", pa.int64()),
                     pa.field("dataChange", pa.bool_()),
+                    pa.field("extendedFileMetadata", pa.bool_()),
+                    pa.field("partitionValues", _STR_MAP),
+                    pa.field("size", pa.int64()),
                 ]
             ),
         ),
@@ -438,6 +576,13 @@ def _small_action_rows(
                     "path": r.path,
                     "deletionTimestamp": r.deletion_timestamp,
                     "dataChange": r.data_change,
+                    "extendedFileMetadata": r.extended_file_metadata,
+                    "partitionValues": (
+                        None
+                        if r.partition_values is None
+                        else list(r.partition_values.items())
+                    ),
+                    "size": r.size,
                 }
             }
         )
@@ -514,7 +659,11 @@ def write_checkpoint(
 # Spark's parquet MAP/LIST encodings match pyarrow's, so parts written by
 # either path read back through the same iter_checkpoint_actions).
 _TXN_DDL = "struct<appId:string,version:bigint,lastUpdated:bigint>"
-_REMOVE_DDL = "struct<path:string,deletionTimestamp:bigint,dataChange:boolean>"
+_REMOVE_DDL = (
+    "struct<path:string,deletionTimestamp:bigint,dataChange:boolean,"
+    "extendedFileMetadata:boolean,partitionValues:map<string,string>,"
+    "size:bigint>"
+)
 _META_DDL = (
     "struct<id:string,name:string,description:string,"
     "format:struct<provider:string,options:map<string,string>>,"

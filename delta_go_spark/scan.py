@@ -222,8 +222,6 @@ class DeltaScan:
         (reference: scan.go:185-199).  Only a `true` verdict accepts — a
         NULL verdict (null partition value) excludes the file, exactly as
         SQL WHERE would exclude its rows."""
-        if self.pushed is None:
-            return True
         record = {k.lower(): v for k, v in (add.partition_values or {}).items()}
         return self.pushed.eval(record) is True
 
@@ -247,9 +245,16 @@ class DeltaScan:
             yield from self._files_distributed(spark)
             return
         self.files_skipped_by_stats = 0
+        # one verdict per distinct partition tuple: a table holds far fewer
+        # tuples than files
+        verdicts: dict[tuple, bool] = {}
         for add in self.snapshot.all_files():
-            if not self._accept(add):
-                continue
+            if self.pushed is not None:
+                key = tuple((add.partition_values or {}).items())
+                if key not in verdicts:
+                    verdicts[key] = self._accept(add)
+                if not verdicts[key]:
+                    continue
             if not stats_may_match(self.residual, add.stats):
                 self.files_skipped_by_stats += 1
                 continue
