@@ -260,17 +260,6 @@ def _open_checkpoint_parquet(path: str, store: LogStore):
     return pq.ParquetFile(pa.BufferReader(store.read_bytes(path)))
 
 
-def checkpoint_num_rows(paths: list[str], store: LogStore) -> int:
-    """Total action rows across checkpoint parts from the parquet FOOTERS
-    alone — an O(bytes-of-footer) upper bound on the table's active-file
-    count (rows also cover removes/txns/protocol/metadata), used to route
-    state reconstruction to the distributed tier without folding
-    anything."""
-    return sum(
-        _open_checkpoint_parquet(p, store).metadata.num_rows for p in paths
-    )
-
-
 def iter_checkpoint_actions(
     paths: list[str],
     store: LogStore,
@@ -337,7 +326,7 @@ def _decode_batch(batch: pa.RecordBatch) -> list[Action]:
                 deletion_timestamp=ts,
                 data_change=bool(dc),
                 extended_file_metadata=bool(ext),
-                partition_values=pv or None,
+                partition_values=pv,
                 size=size,
             )
             for path, ts, dc, ext, pv, size in zip(
@@ -345,7 +334,7 @@ def _decode_batch(batch: pa.RecordBatch) -> list[Action]:
                 _child_values(r, "deletionTimestamp"),
                 _child_values(r, "dataChange"),
                 _child_values(r, "extendedFileMetadata"),
-                _child_maps(r, "partitionValues"),
+                _child_maps(r, "partitionValues", keep_null=True),
                 _child_values(r, "size"),
             )
         ]))
@@ -429,13 +418,16 @@ def _pylist(arr: pa.Array) -> list:
     return arr.to_pylist()
 
 
-def _child_maps(struct: pa.StructArray, name: str) -> list[dict]:
+def _child_maps(
+    struct: pa.StructArray, name: str, keep_null: bool = False
+) -> list[dict | None]:
     """A map<string,string> child as one dict per row, from its offsets
-    and flattened keys/items; a null slot, an empty map and an absent
-    field all read as {}."""
+    and flattened keys/items.  An empty map reads as {}; a null slot and
+    an absent field read as {}, or as None with `keep_null` (a remove's
+    optional partitionValues, as its JSON form folds)."""
     m = _child(struct, name)
     if m is None:
-        return [{} for _ in range(len(struct))]
+        return [None if keep_null else {} for _ in range(len(struct))]
     offs = _pylist(m.offsets)
     lo, hi = offs[0], offs[-1]
     keys = _pylist(m.keys.slice(lo, hi - lo))
@@ -445,10 +437,10 @@ def _child_maps(struct: pa.StructArray, name: str) -> list[dict]:
         for a, b in zip(offs, offs[1:])
     ]
     if m.null_count:
-        # a null slot reads as {} whatever its offsets span
+        # a null slot reads as {} (or None) whatever its offsets span
         for i, ok in enumerate(_pylist(m.is_valid())):
             if not ok:
-                out[i] = {}
+                out[i] = None if keep_null else {}
     return out
 
 
@@ -654,160 +646,3 @@ def write_checkpoint(
     )
     return meta
 
-
-# Checkpoint column DDLs for the Spark-job writer (mirrors CHECKPOINT_SCHEMA;
-# Spark's parquet MAP/LIST encodings match pyarrow's, so parts written by
-# either path read back through the same iter_checkpoint_actions).
-_TXN_DDL = "struct<appId:string,version:bigint,lastUpdated:bigint>"
-_REMOVE_DDL = (
-    "struct<path:string,deletionTimestamp:bigint,dataChange:boolean,"
-    "extendedFileMetadata:boolean,partitionValues:map<string,string>,"
-    "size:bigint>"
-)
-_META_DDL = (
-    "struct<id:string,name:string,description:string,"
-    "format:struct<provider:string,options:map<string,string>>,"
-    "schemaString:string,partitionColumns:array<string>,"
-    "configuration:map<string,string>,createdTime:bigint>"
-)
-_PROTOCOL_DDL = "struct<minReaderVersion:int,minWriterVersion:int>"
-
-
-def write_checkpoint_spark(
-    spark,
-    store: LogStore,
-    log_path: str,
-    version: int,
-    snapshot,
-    protocol: Protocol,
-    metadata: Metadata,
-    set_transactions: list[SetTransaction],
-    tombstones: list[RemoveFile],
-    max_actions_per_part: int = 500_000,
-    n_adds: int | None = None,
-) -> CheckpointMetadata:
-    """Multi-part checkpoint written AS A SPARK JOB — the million-file
-    scale path.
-
-    The add actions (the only O(table-size) component) are reconstructed
-    distributively from the previous checkpoint + log tail
-    (snapshot.checkpoint_adds_df) and written by executors straight into
-    the multi-part form (filename.go:73-79); the driver handles only the
-    bounded small actions (protocol/metaData/txn/removes, part 1) and
-    O(parts) renames.  This moves the checkpoint's pyarrow row-building
-    and parquet serialization off the driver; the TRANSACTION's own
-    replay state (the AddFile dict conflict checking needs) remains a
-    driver cost for now — pairing this writer with a fully distributed
-    state fold is the documented next frontier.  write_checkpoint stays
-    the exact single-file contract for ordinary tables.
-
-    Part layout: part 1 = small actions (driver pyarrow), parts 2..N =
-    adds (Spark, renamed from a staging dir under _delta_log; names
-    starting with '_' are outside the log's delta/checkpoint patterns so
-    a crashed staging dir can never corrupt replay, and the next attempt
-    clears it).  All parts land before the _last_checkpoint pointer
-    flips, so readers see the complete group or the previous anchor.
-    """
-    import math
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from delta_go_spark.snapshot import DeltaError, checkpoint_adds_df
-
-    adds = checkpoint_adds_df(spark, snapshot)
-    full = adds.select(
-        F.lit(None).cast(_TXN_DDL).alias("txn"),
-        F.col("add"),
-        F.lit(None).cast(_REMOVE_DDL).alias("remove"),
-        F.lit(None).cast(_META_DDL).alias("metaData"),
-        F.lit(None).cast(_PROTOCOL_DDL).alias("protocol"),
-    )
-    # The caller usually knows the add count from its own state fold —
-    # counting here would execute the whole distributed reconstruction a
-    # second time (count + write), doubling the dominant cost.
-    if n_adds is None:
-        n_adds = full.count()
-    if n_adds == 0:
-        # nothing to distribute — the pyarrow path is strictly better
-        return write_checkpoint(
-            store, log_path, version, protocol, metadata, [],
-            tombstones, set_transactions,
-        )
-    n_add_parts = max(1, math.ceil(n_adds / max_actions_per_part))
-
-    local = "://" not in log_path
-    staging = os.path.join(log_path, f"_staging_checkpoint_{version:020d}")
-    if local and os.path.isdir(staging):
-        shutil.rmtree(staging)  # debris from a crashed earlier attempt
-    full.repartition(n_add_parts).write.mode("overwrite").parquet(staging)
-    if local:
-        part_files = sorted(
-            os.path.join(staging, f)
-            for f in os.listdir(staging)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-    else:
-        from delta_go_spark.datacloud import hadoop_list_files
-
-        part_files = sorted(
-            p
-            for p, _, _ in hadoop_list_files(spark, staging)
-            if os.path.basename(p).startswith("part-")
-            and p.endswith(".parquet")
-        )
-    # Spark skips part files for empty shuffle partitions, so when the
-    # caller passed an ESTIMATED n_adds (the distributed-state tier does)
-    # the actual file count can come in BELOW the estimate-derived target
-    # — e.g. right after a mass DELETE.  The checkpoint group is named for
-    # what was actually written; the estimate only sized the repartition.
-    if not part_files:
-        raise DeltaError("distributed checkpoint wrote no part files")
-    if len(part_files) > n_add_parts:
-        raise DeltaError(
-            f"distributed checkpoint wrote {len(part_files)} parts, "
-            f"expected at most {n_add_parts}"
-        )
-    n_add_parts = len(part_files)
-    n_parts = 1 + n_add_parts
-    targets = filenames.checkpoint_file_parts(log_path, version, n_parts)
-    if local:
-        for src, dst in zip(part_files, targets[1:]):
-            os.replace(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-    else:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.Path(log_path).getFileSystem(conf)
-        for src, dst in zip(part_files, targets[1:]):
-            if not fs.rename(
-                jvm.org.apache.hadoop.fs.Path(src),
-                jvm.org.apache.hadoop.fs.Path(dst),
-            ):
-                raise DeltaError(f"checkpoint part rename failed: {src}")
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-
-    small = _small_action_rows(protocol, metadata, set_transactions, tombstones)
-    _emit_part(
-        store, pa.Table.from_pylist(small, schema=CHECKPOINT_SCHEMA), targets[0]
-    )
-    # _last_checkpoint.size must be exact even when the caller passed an
-    # ESTIMATED n_adds for part sizing (the distributed-state tier does,
-    # to avoid running the add reconstruction twice): the written parts'
-    # parquet footers give the true row count for free.
-    n_adds_written = checkpoint_num_rows(list(targets[1:]), store)
-    meta = CheckpointMetadata(
-        version=version, size=len(small) + n_adds_written, parts=n_parts
-    )
-    store.write(
-        last_checkpoint_path(log_path),
-        [
-            json.dumps(
-                {"version": meta.version, "size": meta.size, "parts": n_parts},
-                separators=(",", ":"),
-            )
-        ],
-        overwrite=True,
-    )
-    return meta

@@ -273,9 +273,8 @@ class DeltaDml:
         [min(on), max(on)] range.  One tiny aggregate over the source buys file
         skipping on the big side through the SAME scan machinery filtered
         reads use (partition pruning when `on` is a partition column,
-        min/max stats otherwise, distributed above the state threshold) —
-        on a key-clustered 100 TB target a small upsert batch reads the
-        overlapping files, not the table.  Conservative by construction:
+        min/max stats otherwise) — on a key-clustered 100 TB target a
+        small upsert batch reads the overlapping files, not the table.  Conservative by construction:
         missing stats, un-coercible bounds, or any scan error keep every
         file; conflict detection is unchanged (read_whole_table).  An
         empty or all-NULL-key source prunes to [] — NULL never

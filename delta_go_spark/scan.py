@@ -230,20 +230,7 @@ class DeltaScan:
         (newest add per canonical path wins, removes tombstoned —
         replay_action.go:80-116), so this is a filter over all_files():
         partition pruning first (free — no stats parse), then min/max
-        stats skipping on the residual data predicate.
-
-        Above the distributed-state threshold the same pruning runs AS A
-        SPARK JOB over the reconstructed adds DataFrame and only the
-        survivors stream back — the driver never folds, or even holds,
-        the full file list (see _files_distributed)."""
-        from pyspark.sql import SparkSession
-
-        from delta_go_spark.snapshot import use_distributed_state
-
-        spark = SparkSession.getActiveSession()
-        if use_distributed_state(spark, self.snapshot):
-            yield from self._files_distributed(spark)
-            return
+        stats skipping on the residual data predicate."""
         self.files_skipped_by_stats = 0
         # one verdict per distinct partition tuple: a table holds far fewer
         # tuples than files
@@ -259,55 +246,6 @@ class DeltaScan:
                 self.files_skipped_by_stats += 1
                 continue
             yield add
-
-    def _files_distributed(self, spark) -> Iterator[AddFile]:
-        """Candidate selection as a Spark job — the distributed state
-        fold.  Active adds are reconstructed from the checkpoint parquet +
-        JSON tail (checkpoint_adds_df — one window over (path, version),
-        no driver fold), then partition pruning and stats skipping run
-        per FILE inside an Arrow-batched mapInPandas that ships the EXACT
-        driver-path predicates (`_accept`'s eval and stats_may_match), so
-        the two tiers can never diverge on semantics.  Survivors stream
-        back via toLocalIterator: driver memory is O(candidates after
-        pruning) — the same order as the RemoveFiles a DML commit must
-        hold anyway — never O(#table files)."""
-        from delta_go_spark.snapshot import checkpoint_adds_df
-
-        adds = checkpoint_adds_df(spark, self.snapshot).select("add.*")
-        pushed, residual = self.pushed, self.residual
-        # executor-side pruning: the per-file skip counter is not
-        # aggregated back in this mode (it would cost a second job)
-        self.files_skipped_by_stats = 0
-
-        def _keep(batches):
-            for pdf in batches:
-                mask = []
-                for pv, st in zip(pdf["partitionValues"], pdf["stats"]):
-                    ok = True
-                    if pushed is not None:
-                        # Arrow hands MapType cells to pandas as a list of
-                        # (k, v) tuples (dict when duplicate-key-safe)
-                        items = (
-                            pv.items() if isinstance(pv, dict) else (pv or [])
-                        )
-                        record = {k.lower(): v for k, v in items}
-                        ok = pushed.eval(record) is True
-                    stats = st if isinstance(st, str) else None
-                    if ok and not stats_may_match(residual, stats):
-                        ok = False
-                    mask.append(ok)
-                yield pdf[mask]
-
-        for r in adds.mapInPandas(_keep, adds.schema).toLocalIterator():
-            yield AddFile(
-                path=r["path"],
-                partition_values=dict(r["partitionValues"] or {}),
-                size=r["size"] or 0,
-                modification_time=r["modificationTime"] or 0,
-                data_change=bool(r["dataChange"]),
-                stats=r["stats"],
-                tags=dict(r["tags"]) if r["tags"] else None,
-            )
 
     def to_df(self, spark):
         """Data plane: read surviving files, apply the residual predicate.

@@ -5,12 +5,13 @@ Reference: snapshot_reader.go (segment discovery + contiguity),
 snapshot.go (state fold + P&M resolution), replay_action.go (replay
 semantics), log_segment.go.
 
-Scale note: the log tail since the last checkpoint is small by
-construction (checkpoint every 10 commits), so the state fold is plain
-Python on the driver.  For tables whose *checkpoint* is huge (millions of
-files), `files_df()` exposes the active-file list as a Spark DataFrame read
-straight from the checkpoint parquet + JSON tail, so no file list need ever
-materialize on the driver.
+State is one in-memory fold on the driver (snapshot.go:224-297): the
+checkpoint's actions, decoded column-wise one Arrow batch at a time,
+then each JSON commit of the tail, folded newest-wins by canonical path
+into a TableState.  Every consumer (scan, transaction, checkpoint
+writer, DML) reads that one fold.  Protocol and metadata alone resolve
+without it, by reverse replay over the tail and a column-projected read
+of the checkpoint.
 """
 
 from __future__ import annotations
@@ -151,13 +152,14 @@ def canonicalize_path(path: str, table_root: str) -> str:
     """Canonical key for replay dedup (reference:
     internal/util/path/resolver.go:87-126): percent-decode, resolve
     relative paths against the table root, normalize file URIs."""
-    import re
-
     p = unquote(path)
     if p.startswith("file:"):
         # file:/abs, file://abs and file:///abs all mean a local absolute
         # path (resolver.go:87-126 parses them as URIs)
-        return os.path.normpath(re.sub(r"^/+", "/", p[len("file:"):]))
+        rest = p[len("file:"):]
+        if rest.startswith("/"):
+            rest = "/" + rest.lstrip("/")
+        return os.path.normpath(rest)
     if "://" in p:
         return p
     if os.path.isabs(p):
@@ -251,8 +253,6 @@ class Snapshot:
         self._lock = threading.RLock()  # state() -> metadata() re-enters
         self._state: TableState | None = None
         self._pm: tuple[Protocol, Metadata] | None = None
-        self._est_count: int | None = None
-        self._txns_lite: list[SetTransaction] | None = None
 
     @property
     def version(self) -> int:
@@ -329,24 +329,6 @@ class Snapshot:
         except DeltaError:
             return 0
 
-    def estimated_file_count(self) -> int:
-        """Upper bound on active files WITHOUT folding state: checkpoint
-        parquet footer row counts (O(footer bytes), no data pages) + tail
-        JSON line counts (the tail is read during any fold anyway).  Rows
-        also cover removes/txns/protocol/metadata, so this over-estimates —
-        the safe direction for routing to the distributed tier."""
-        if self._est_count is not None:
-            return self._est_count
-        n = 0
-        if self.segment.checkpoints:
-            n += ckpt.checkpoint_num_rows(
-                list(self.segment.checkpoints), self.store
-            )
-        for path in self.segment.deltas:
-            n += sum(1 for _ in self.store.read(path))
-        self._est_count = n
-        return n
-
     def state(self) -> TableState:
         if self._state is not None:
             return self._state
@@ -415,259 +397,3 @@ def assert_protocol_read_compatible(protocol: Protocol) -> None:
 def encode_rel_path(path: str) -> str:
     return quote(path, safe="/")
 
-
-def _canonical_key_udf(table_root: str):
-    """Spark-side canonical replay key: the SAME :func:`canonicalize_path`
-    the driver fold keys on (replay_action.go:80-116 / resolver.go:87-126),
-    run as an Arrow-batched pandas UDF so the distributed state tier can
-    never disagree with the driver tier on file identity (an AddFile
-    logged relative+percent-encoded and its RemoveFile logged absolute
-    must collapse to one replay key in BOTH tiers).  Path columns are
-    metadata-sized (one row per log action), so the Python batch cost is
-    noise next to the log read itself."""
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: `pd` is imported function-locally here, so string
-    # annotations (PEP 563 is on module-wide) would not resolve and Spark's
-    # hint inference raises UNSUPPORTED_SIGNATURE — the explicit returnType
-    # legacy form sidesteps it.
-    def _canon(paths):
-        return paths.map(
-            lambda p: None if p is None else canonicalize_path(p, table_root)
-        )
-
-    return pandas_udf(_canon, "string")
-
-
-_ADD_STRUCT_DDL = (
-    "struct<path:string,partitionValues:map<string,string>,size:bigint,"
-    "modificationTime:bigint,dataChange:boolean,stats:string,"
-    "tags:map<string,string>>"
-)
-
-
-def checkpoint_adds_df(spark, snapshot: "Snapshot"):
-    """Active AddFiles with their COMPLETE action payload (partition
-    values, stats, tags), reconstructed as a Spark job — the scale path
-    of state reconstruction, used by the distributed scan and the
-    checkpoint writer.
-
-    The checkpoint parquet + tail JSON commits are read with Spark and
-    newest-action-per-path is resolved with one window (over the
-    canonical path, version desc, add-beats-remove within a version —
-    the newest-wins/tombstone rule of replay_action.go:80-116), carrying
-    the full add struct in the parquet checkpoint layout so the result
-    can be written straight into multi-part checkpoint files without the
-    driver ever materializing the file list.  JSON-sourced partitionValues/tags arrive as structs
-    (Spark's JSON inference) and are converted to the checkpoint's
-    map<string,string> form; checkpoint-sourced rows already match.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import MapType, StructType
-
-    seg = snapshot.segment
-    null_add = F.lit(None).cast(_ADD_STRUCT_DDL)
-    parts = []
-    if seg.checkpoints:
-        ck = spark.read.parquet(*[p for p in seg.checkpoints])
-        cols = ck.columns
-        parts.append(
-            ck.select(
-                (F.col("add").cast(_ADD_STRUCT_DDL) if "add" in cols else null_add).alias("add"),
-                (F.col("remove.path") if "remove" in cols else F.lit(None).cast("string")).alias("rm_path"),
-                F.lit(seg.checkpoint_version or -1).cast("long").alias("version"),
-            )
-        )
-    for path in seg.deltas:
-        v = int(os.path.basename(path).split(".")[0])
-        dj = spark.read.json(path)
-        cols = dj.columns
-        if "add" not in cols:
-            add_col = null_add
-        else:
-            afields = {f.name: f for f in dj.schema["add"].dataType.fields}
-
-            def _as_map(field: str, _af=afields) -> "F.Column":
-                if field not in _af:
-                    return F.lit(None).cast("map<string,string>")
-                dt = _af[field].dataType
-                if isinstance(dt, MapType):
-                    return F.col(f"add.{field}").cast("map<string,string>")
-                if isinstance(dt, StructType):
-                    ks = dt.fieldNames()
-                    if not ks:
-                        return F.expr("map()").cast("map<string,string>")
-                    return F.map_from_arrays(
-                        F.array(*[F.lit(k) for k in ks]),
-                        F.array(
-                            *[F.col(f"add.{field}.{k}").cast("string") for k in ks]
-                        ),
-                    )
-                return F.lit(None).cast("map<string,string>")
-
-            def _fld(field: str, typ: str, _af=afields) -> "F.Column":
-                if field not in _af:
-                    return F.lit(None).cast(typ)
-                return F.col(f"add.{field}").cast(typ)
-
-            add_col = F.when(
-                F.col("add.path").isNotNull(),
-                F.struct(
-                    F.col("add.path").alias("path"),
-                    _as_map("partitionValues").alias("partitionValues"),
-                    _fld("size", "bigint").alias("size"),
-                    _fld("modificationTime", "bigint").alias("modificationTime"),
-                    _fld("dataChange", "boolean").alias("dataChange"),
-                    _fld("stats", "string").alias("stats"),
-                    _as_map("tags").alias("tags"),
-                ),
-            ).otherwise(null_add)
-        parts.append(
-            dj.select(
-                add_col.alias("add"),
-                (
-                    F.col("remove.path")
-                    if "remove" in cols
-                    else F.lit(None).cast("string")
-                ).alias("rm_path"),
-                F.lit(v).cast("long").alias("version"),
-            )
-        )
-    if not parts:
-        return spark.createDataFrame([], f"add {_ADD_STRUCT_DDL}").select("add")
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    canon = _canonical_key_udf(snapshot.table_root)
-    events = union.select(
-        "add",
-        F.coalesce(F.col("add.path"), F.col("rm_path")).alias("path"),
-        "version",
-        F.col("add.path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    # Canonical replay key, matching the driver fold: mixed spellings
-    # (relative percent-encoded add vs absolute remove) dedup exactly like
-    # InMemoryLogReplay.
-    events = events.withColumn("_ckey", canon(F.col("path")))
-    w = Window.partitionBy("_ckey").orderBy(F.desc("version"), F.desc("is_add"))
-    return (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & F.col("is_add"))
-        .select("add")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Distributed state fold (round 6): route every state consumer on the DML /
-# commit / checkpoint path away from the driver-side AddFile dict when the
-# table is large.  The reference folds in memory (snapshot.go:224-297) —
-# fine for its connector role; at a million-file 100 TB table that is
-# GB-scale driver state on every commit, so above the threshold:
-#   - candidate files  -> Spark job over checkpoint_adds_df (scan.py)
-#   - checkpoint write -> write_checkpoint_spark (checkpoint.py:528)
-#   - protocol/metadata -> column-projected reverse replay (never the
-#     add/remove payload)
-#   - txn / tombstone state -> the "lite" folds below: column-pruned
-#     checkpoint reads, O(non-add rows + tail), bounded driver memory.
-
-DISTRIBUTED_STATE_THRESHOLD_CONF = "spark.delta_go.state.distributedFileThreshold"
-
-
-def distributed_state_threshold(spark) -> int:
-    try:
-        return int(spark.conf.get(DISTRIBUTED_STATE_THRESHOLD_CONF, "200000"))
-    except Exception:
-        return 200_000
-
-
-def spark_can_read_log(spark, log_path: str) -> bool:
-    """Spark itself can list/read the log files: local paths always; cloud
-    URIs only with a native Hadoop connector; never a register_store-bound
-    fake (driver-process state is invisible to executors)."""
-    from delta_go_spark.datacloud import use_native_cloud
-    from delta_go_spark.store import has_registered_binding
-
-    if has_registered_binding(log_path):
-        return False
-    return "://" not in log_path or use_native_cloud(spark, log_path)
-
-
-def use_distributed_state(spark, snapshot: "Snapshot | None") -> bool:
-    """True when state consumers should run as Spark jobs instead of
-    folding the AddFile dict on the driver: a live session that can read
-    the log, an un-folded snapshot (an existing fold is free to reuse),
-    and an estimated file count over the threshold."""
-    if spark is None or snapshot is None or snapshot.version < 0:
-        return False
-    if snapshot._state is not None:
-        return False
-    threshold = distributed_state_threshold(spark)
-    if threshold <= 0:
-        return False
-    if not spark_can_read_log(spark, snapshot.segment.log_path):
-        return False
-    try:
-        return snapshot.estimated_file_count() >= threshold
-    except Exception:
-        return False
-
-
-def set_transactions_lite(snapshot: "Snapshot") -> list[SetTransaction]:
-    """SetTransaction state WITHOUT the full fold: column-pruned checkpoint
-    read (txn pages only, nulls dropped Arrow-side) + tail JSON replay —
-    O(#apps + tail), never O(#files).  Same newest-wins semantics as
-    InMemoryLogReplay (later action replaces earlier).  Memoized on the
-    snapshot — a streaming writer probing txn_version per micro-batch
-    must not re-read the checkpoint txn pages every call."""
-    if snapshot._txns_lite is not None:
-        return snapshot._txns_lite
-    txns: dict[str, SetTransaction] = {}
-    seg = snapshot.segment
-    if seg.checkpoints:
-        for a in ckpt.iter_checkpoint_actions(
-            list(seg.checkpoints), snapshot.store, columns=["txn"]
-        ):
-            if isinstance(a, SetTransaction):
-                txns[a.app_id] = a
-    for path in seg.deltas:
-        for line in snapshot.store.read(path):
-            a = action_from_json(line)
-            if isinstance(a, SetTransaction):
-                txns[a.app_id] = a
-    snapshot._txns_lite = list(txns.values())
-    return snapshot._txns_lite
-
-
-def tombstones_lite(
-    snapshot: "Snapshot", min_file_retention_ts: int | None = None
-) -> list[RemoveFile]:
-    """Unexpired tombstones WITHOUT the full fold: column-pruned checkpoint
-    read (remove pages only) + tail replay, O(#tombstones + tail).
-
-    Replay-exact under the checkpoint invariant that a spec-compliant
-    writer emits disjoint add/remove sets (a checkpoint is folded state,
-    so no path appears as both) — tail adds still pop re-added paths and
-    tail removes insert, exactly like InMemoryLogReplay."""
-    if min_file_retention_ts is None:
-        min_file_retention_ts = snapshot.min_file_retention_ts()
-    tomb: dict[str, RemoveFile] = {}
-    seg = snapshot.segment
-    root = snapshot.table_root
-    if seg.checkpoints:
-        for a in ckpt.iter_checkpoint_actions(
-            list(seg.checkpoints), snapshot.store, columns=["remove"]
-        ):
-            if isinstance(a, RemoveFile) and (
-                (a.deletion_timestamp or 0) > min_file_retention_ts
-            ):
-                tomb[canonicalize_path(a.path, root)] = a
-    for path in seg.deltas:
-        for line in snapshot.store.read(path):
-            a = action_from_json(line)
-            if isinstance(a, AddFile):
-                tomb.pop(canonicalize_path(a.path, root), None)
-            elif isinstance(a, RemoveFile):
-                if (a.deletion_timestamp or 0) > min_file_retention_ts:
-                    tomb[canonicalize_path(a.path, root)] = a
-    return list(tomb.values())

@@ -93,31 +93,10 @@ class OptimisticTransaction:
 
     # -- reads recorded for conflict detection ----------------------------
     def txn_version(self, app_id: str) -> int:
-        """Idempotency lookup (reference: trnx.go:330-337).  On a large
-        un-folded snapshot the lookup runs off the lite fold (column-
-        pruned checkpoint txn pages + tail) instead of materializing the
-        AddFile dict just to read one SetTransaction."""
+        """Idempotency lookup (reference: trnx.go:330-337)."""
         self.read_txns.add(app_id)
         if self.snapshot is None:
             return -1
-        from delta_go_spark.snapshot import (
-            set_transactions_lite,
-            use_distributed_state,
-        )
-
-        if self.snapshot._state is None:
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
-            # Same gate as every other distributed-state consumer: honors
-            # the threshold<=0 disable and never probes estimated_file_count
-            # on a register_store-bound log (whose count would fall back to
-            # driver-side full reads — the cost this tier exists to avoid).
-            if use_distributed_state(spark, self.snapshot):
-                for t in set_transactions_lite(self.snapshot):
-                    if t.app_id == app_id:
-                        return t.version
-                return -1
         t = self.snapshot.state().set_transactions.get(app_id)
         return t.version if t else -1
 
@@ -443,30 +422,6 @@ class OptimisticTransaction:
                 return True
         return False
 
-    def _use_distributed_checkpoint(self, spark, snap) -> bool:
-        """Route the checkpoint through the Spark-job multi-part writer
-        when the snapshot's file count reaches the distributed-state
-        threshold (spark.delta_go.state.distributedFileThreshold; <= 0
-        disables the Spark tier) — a million-add pyarrow table on the
-        driver is the scale ceiling this avoids.  The count is the folded
-        state's when one exists, else the footer-based upper bound, so an
-        unfolded snapshot is never folded just to decide.  Requires a
-        live session and a log Spark itself can read (local path or
-        native-capable cloud; never a register_store-bound fake)."""
-        from delta_go_spark.snapshot import (
-            distributed_state_threshold,
-            spark_can_read_log,
-        )
-
-        if spark is None:
-            return False
-        threshold = distributed_state_threshold(spark)
-        if threshold <= 0 or not spark_can_read_log(spark, self.log.log_path):
-            return False
-        if snap._state is not None:
-            return len(snap._state.active_files) >= threshold
-        return snap.estimated_file_count() >= threshold
-
     def _post_commit(self, version: int) -> None:
         """Checkpoint every checkpointInterval commits
         (reference: trnx.go:647-675)."""
@@ -484,55 +439,17 @@ class OptimisticTransaction:
                 if snap.version == version
                 else self.log.snapshot_for_version_as_of(version)
             )
-            from pyspark.sql import SparkSession
-
-            from delta_go_spark.snapshot import (
-                set_transactions_lite,
-                tombstones_lite,
+            st = target.state()
+            ckpt_mod.write_checkpoint(
+                self.log.store,
+                self.log.log_path,
+                version,
+                st.protocol,
+                st.metadata,
+                list(st.active_files.values()),
+                list(st.tombstones.values()),
+                list(st.set_transactions.values()),
             )
-
-            spark = SparkSession.getActiveSession()
-            if self._use_distributed_checkpoint(spark, target):
-                # Above the threshold the driver never folds: txn/tombstone
-                # state comes from the folded state when one already
-                # exists, else from the lite folds; protocol/metadata from
-                # the column-projected reverse replay; adds from the Spark
-                # reconstruction inside the writer.
-                st = target._state
-                if st is not None:
-                    txns = list(st.set_transactions.values())
-                    tombs = list(st.tombstones.values())
-                    n_adds = len(st.active_files)
-                else:
-                    txns = set_transactions_lite(target)
-                    tombs = tombstones_lite(target)
-                    # the upper-bound estimate sizes the parts; the writer
-                    # records the exact count from the part footers
-                    n_adds = target.estimated_file_count()
-                ckpt_mod.write_checkpoint_spark(
-                    spark,
-                    self.log.store,
-                    self.log.log_path,
-                    version,
-                    target,
-                    target.protocol(),
-                    target.metadata(),
-                    txns,
-                    tombs,
-                    n_adds=n_adds,
-                )
-            else:
-                st = target.state()
-                ckpt_mod.write_checkpoint(
-                    self.log.store,
-                    self.log.log_path,
-                    version,
-                    st.protocol,
-                    st.metadata,
-                    list(st.active_files.values()),
-                    list(st.tombstones.values()),
-                    list(st.set_transactions.values()),
-                )
             if cfg.get_bool(meta.configuration, cfg.ENABLE_EXPIRED_LOG_CLEANUP):
                 from delta_go_spark.maintenance import cleanup_expired_logs
 

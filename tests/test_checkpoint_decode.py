@@ -3,9 +3,13 @@ replaced, and checkpoint-vs-JSON state parity.
 
 The oracle below is the row-wise decode (`batch.to_pylist()` then one
 `_row_to_action` per row) that `iter_checkpoint_actions` used before the
-columnar decoder.  It is kept verbatim as a reference implementation:
-every checkpoint shape here must decode to the same ordered action list
-through both."""
+columnar decoder.  It is kept as a reference implementation: every
+checkpoint shape here must decode to the same ordered action list
+through both.  One rule differs from the original row-wise decode: a
+remove's partitionValues follows the protocol, so a null map reads as
+None and an empty map as {} (the original turned {} into None, so an
+unpartitioned table's tombstone folded differently from its JSON
+commit)."""
 
 import json
 import os
@@ -14,6 +18,8 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from delta_go_spark import checkpoint as ckpt
 from delta_go_spark import ops
@@ -26,9 +32,11 @@ from delta_go_spark.actions import (
     RemoveFile,
     SetTransaction,
 )
+from delta_go_spark.expressions import Column, EqualTo, Literal
 from delta_go_spark.log import DeltaLog
 from delta_go_spark.snapshot import LogSegment, Snapshot
 from delta_go_spark.store import LocalStore
+from delta_go_spark.table import DeltaTable
 
 # ---------------------------------------------------------------------------
 # Oracle: the row-wise decoder, verbatim.
@@ -56,7 +64,11 @@ def _oracle_row_to_action(row: dict) -> Action | None:
             deletion_timestamp=r.get("deletionTimestamp"),
             data_change=bool(r.get("dataChange")),
             extended_file_metadata=bool(r.get("extendedFileMetadata", False)),
-            partition_values=_oracle_map_to_dict(r.get("partitionValues")) or None,
+            partition_values=(
+                None
+                if r.get("partitionValues") is None
+                else _oracle_map_to_dict(r["partitionValues"])
+            ),
             size=r.get("size"),
         )
     if row.get("metaData") is not None:
@@ -338,41 +350,73 @@ def test_decode_matches_rowwise_foreign_writer(tmp_path):
 
 
 def test_decode_matches_rowwise_spark_part(spark, tmp_path):
-    """Parts written by write_checkpoint_spark: the add parts come from a
-    Spark parquet job (Spark's own MAP encoding), part 1 from pyarrow."""
-    log = DeltaLog.for_table(str(tmp_path / "tbl"))
-    txn = log.start_transaction()
-    txn.update_metadata(
-        Metadata(schema_string=_SCHEMA, partition_columns=["x"],
-                 configuration={"delta.checkpointInterval": "0"})
-    )
-    txn.commit([], ops.CREATE_TABLE)
-    for i in range(6):
-        pv = {"x": None if i == 2 else str(i % 2)}
-        log.start_transaction().commit(
-            [AddFile(f"x={i % 2}/f{i}.parquet", pv, 10 + i, NOW + i, True,
-                     None if i == 1 else '{"numRecords":3}',
-                     {"a": "b"} if i == 4 else None)],
-            ops.WRITE,
+    """A multi-part checkpoint written by a Spark parquet job, as other
+    Delta writers emit it: Spark's own MAP and LIST encodings in every
+    action column, adds spread over several part files."""
+    adds = [
+        AddFile(
+            f"x={i % 2}/f{i}.parquet",
+            {"x": None if i == 2 else str(i % 2)},
+            10 + i,
+            NOW + i,
+            i % 3 == 0,
+            None if i == 1 else '{"numRecords":3}',
+            {"a": "b"} if i == 4 else None,
         )
-    snap = log.update()
-    victim = snap.all_files()[0]
-    log.start_transaction().commit([victim.remove(int(time.time() * 1000))], ops.DELETE)
-    snap = log.update()
-    st = snap.state()
-    meta = ckpt.write_checkpoint_spark(
-        spark, log.store, log.log_path, snap.version, snap,
-        st.protocol, st.metadata, list(st.set_transactions.values()),
-        list(st.tombstones.values()), max_actions_per_part=2,
+        for i in range(12)
+    ]
+    rows = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "s", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": _SCHEMA, "partitionColumns": ["x"],
+                      "configuration": {"delta.checkpointInterval": "5"},
+                      "createdTime": NOW}},
+        {"txn": {"appId": "app", "version": 3, "lastUpdated": None}},
+        {"remove": {"path": "x=1/gone.parquet", "deletionTimestamp": NOW,
+                    "dataChange": True, "extendedFileMetadata": True,
+                    "partitionValues": {"x": "1"}, "size": 4}},
+        {"remove": {"path": "flat.parquet", "deletionTimestamp": NOW,
+                    "dataChange": True, "extendedFileMetadata": True,
+                    "partitionValues": {}, "size": 5}},
+        {"remove": {"path": "old.parquet", "deletionTimestamp": NOW,
+                    "dataChange": False, "extendedFileMetadata": False,
+                    "partitionValues": None, "size": None}},
+    ]
+    rows += [
+        {"add": {"path": a.path, "partitionValues": a.partition_values,
+                 "size": a.size, "modificationTime": a.modification_time,
+                 "dataChange": a.data_change, "stats": a.stats, "tags": a.tags}}
+        for a in adds
+    ]
+    ddl = (
+        "txn struct<appId:string,version:bigint,lastUpdated:bigint>, "
+        "add struct<path:string,partitionValues:map<string,string>,size:bigint,"
+        "modificationTime:bigint,dataChange:boolean,stats:string,"
+        "tags:map<string,string>>, "
+        "remove struct<path:string,deletionTimestamp:bigint,dataChange:boolean,"
+        "extendedFileMetadata:boolean,partitionValues:map<string,string>,"
+        "size:bigint>, "
+        "metaData struct<id:string,name:string,description:string,"
+        "format:struct<provider:string,options:map<string,string>>,"
+        "schemaString:string,partitionColumns:array<string>,"
+        "configuration:map<string,string>,createdTime:bigint>, "
+        "protocol struct<minReaderVersion:int,minWriterVersion:int>"
     )
-    paths = ckpt.checkpoint_files_of(
-        ckpt.CheckpointInstance(meta.version, meta.parts), log.log_path
+    cols = ("txn", "add", "remove", "metaData", "protocol")
+    full = [{c: r.get(c) for c in cols} for r in rows]
+    out = str(tmp_path / "spark_ckpt")
+    spark.createDataFrame(full, ddl).repartition(3).write.parquet(out)
+    paths = sorted(
+        os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
     )
-    assert len(paths) > 2
-    got = _assert_same(paths, log.store)
-    assert sorted(a.path for a in got if isinstance(a, AddFile)) == sorted(
-        a.path for a in snap.all_files()
-    )
+    assert len(paths) > 1
+    got = _assert_same(paths, LocalStore(str(tmp_path)))
+    assert sorted(
+        (a for a in got if isinstance(a, AddFile)), key=lambda a: a.path
+    ) == sorted(adds, key=lambda a: a.path)
+    pvs = {r.path: r.partition_values for r in got if isinstance(r, RemoveFile)}
+    assert pvs == {"x=1/gone.parquet": {"x": "1"}, "flat.parquet": {},
+                   "old.parquet": None}
 
 
 # ---------------------------------------------------------------------------
@@ -389,16 +433,15 @@ _SCHEMA = json.dumps(
 )
 
 
-def test_checkpoint_fold_equals_json_fold(tmp_path):
-    """The TableState folded from the version-10 checkpoint equals the one
-    folded from JSON commits 0-10 alone: protocol, metadata, active files,
-    tombstones (with their extended file metadata) and txns."""
-    log = DeltaLog.for_table(str(tmp_path / "tbl"))
+def _fold_from_checkpoint_and_json(root: str, partitioned: bool):
+    """Commit versions 0-10 (checkpoint at 10) with adds, txns and three
+    removes; return (checkpoint fold, JSON-only fold) of version 10."""
+    log = DeltaLog.for_table(root)
     txn = log.start_transaction()
     txn.update_metadata(
         Metadata(
             schema_string=_SCHEMA,
-            partition_columns=["x"],
+            partition_columns=["x"] if partitioned else [],
             format=Format("parquet", {"o": "1"}),
             configuration={"delta.checkpointInterval": "10"},
         )
@@ -409,8 +452,8 @@ def test_checkpoint_fold_equals_json_fold(tmp_path):
         txn = log.start_transaction()
         acts = [
             AddFile(
-                f"x={v % 3}/f{v}.parquet",
-                {"x": None if v == 4 else str(v % 3)},
+                f"x={v % 3}/f{v}.parquet" if partitioned else f"f{v}.parquet",
+                ({"x": None if v == 4 else str(v % 3)} if partitioned else {}),
                 100 * v,
                 now + v,
                 True,
@@ -422,7 +465,7 @@ def test_checkpoint_fold_equals_json_fold(tmp_path):
         gone = {5: "f4", 8: "f1", 9: "f6"}.get(v)  # f4's x is None
         if gone:
             (victim,) = [
-                f for f in log.update().all_files() if f"/{gone}." in f.path
+                f for f in log.update().all_files() if f"{gone}." in f.path
             ]
             acts.append(victim.remove(now + v))
         assert txn.commit(acts, ops.WRITE) == v
@@ -447,12 +490,76 @@ def test_checkpoint_fold_equals_json_fold(tmp_path):
         ),
         from_ckpt.table_root,
     )
-    a, b = from_ckpt.state(), json_only.state()
-    assert len(b.tombstones) == 3 and len(b.set_transactions) == 2
-    assert a.protocol == b.protocol
-    assert a.metadata == b.metadata
-    assert a.active_files == b.active_files
-    assert a.set_transactions == b.set_transactions
-    assert a.tombstones == b.tombstones
-    assert all(r.extended_file_metadata for r in a.tombstones.values())
-    assert {"x": None} in [r.partition_values for r in a.tombstones.values()]
+    return from_ckpt.state(), json_only.state()
+
+
+def test_checkpoint_fold_equals_json_fold(tmp_path):
+    """The TableState folded from the version-10 checkpoint equals the one
+    folded from JSON commits 0-10 alone: protocol, metadata, active files,
+    tombstones (with their extended file metadata) and txns — for a
+    partitioned table and for an unpartitioned one, whose tombstones carry
+    an empty partitionValues map."""
+    for partitioned in (True, False):
+        root = str(tmp_path / ("part" if partitioned else "flat"))
+        a, b = _fold_from_checkpoint_and_json(root, partitioned)
+        assert len(b.tombstones) == 3 and len(b.set_transactions) == 2
+        assert a.protocol == b.protocol
+        assert a.metadata == b.metadata
+        assert a.active_files == b.active_files
+        assert a.set_transactions == b.set_transactions
+        assert a.tombstones == b.tombstones
+        assert all(r.extended_file_metadata for r in a.tombstones.values())
+        pvs = [r.partition_values for r in a.tombstones.values()]
+        if partitioned:
+            assert {"x": None} in pvs
+        else:
+            assert pvs == [{}, {}, {}]
+
+
+# ---------------------------------------------------------------------------
+# Protocol and metadata resolution
+
+
+def _partitioned_table(spark, tmp_path, name, n_appends=9):
+    """Create + n appends over partition column p (many files, version =
+    n_appends)."""
+    path = str(tmp_path / name)
+    df = spark.range(0, 60).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 6).cast("long").alias("p"),
+    )
+    DeltaTable.create(spark, path, df, partition_by=["p"])
+    t = DeltaTable.for_path(spark, path)
+    for i in range(1, n_appends + 1):
+        t.append(
+            spark.range(100 * i, 100 * i + 12).select(
+                F.col("id").alias("k"),
+                (F.col("id") % 6).cast("long").alias("p"),
+            )
+        )
+    return path
+
+
+def test_pm_resolution_reads_only_pm_columns(spark, tmp_path, monkeypatch):
+    """protocol()/metadata() on a checkpoint-anchored snapshot must go
+    through the column-projected read — never materialize add rows."""
+    import delta_go_spark.checkpoint as ckpt_mod
+
+    path = _partitioned_table(spark, tmp_path, "pmproj", n_appends=9)
+    t = DeltaTable.for_path(spark, path)
+    t.delete(EqualTo(Column("p", LongType()), Literal(5)))  # checkpoint @10
+
+    seen = []
+    orig = ckpt_mod.iter_checkpoint_actions
+
+    def spy(paths, store, batch_size=10_000, columns=None):
+        seen.append(columns)
+        return orig(paths, store, batch_size, columns=columns)
+
+    monkeypatch.setattr(ckpt_mod, "iter_checkpoint_actions", spy)
+    snap = DeltaLog.for_table(path).update()
+    assert snap.segment.checkpoints  # anchored on the new checkpoint
+    # force the reverse P&M replay to reach the checkpoint batch: the
+    # tail is empty right after the checkpoint commit, so it must
+    snap.metadata()
+    assert seen and all(c == ["protocol", "metaData"] for c in seen)

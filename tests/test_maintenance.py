@@ -208,159 +208,6 @@ def test_multipart_checkpoint_roundtrip(spark, tmp_path):
     assert snap2.to_df(spark).count() == snap.to_df(spark).count()
 
 
-def test_distributed_checkpoint_spark_writer_roundtrip(spark, tmp_path):
-    """write_checkpoint_spark: adds reconstructed + written by a Spark
-    job into the multi-part form; our own reader stitches the parts and
-    reproduces exactly the driver-fold state (paths, partition values,
-    stats, tombstones)."""
-    import os
-
-    from delta_go_spark import checkpoint as ckpt_mod
-    from delta_go_spark.log import DeltaLog
-
-    path = str(tmp_path / "dckpt")
-    DeltaTable.create(
-        spark,
-        path,
-        spark.createDataFrame(
-            [(i, "a" if i % 2 else "b") for i in range(20)], "k long, par string"
-        ),
-        partition_by=["par"],
-    )
-    t = DeltaTable.for_path(spark, path)
-    for i in range(4):
-        t.append(
-            spark.createDataFrame([(100 + i, "a")], "k long, par string")
-        )
-    t.delete_where("k >= 0")  # produce tombstones
-    t.append(
-        spark.createDataFrame([(7, "a"), (8, "b")], "k long, par string")
-    )
-    log = DeltaLog.for_table(path)
-    snap = log.update()
-    st = snap.state()
-    meta = ckpt_mod.write_checkpoint_spark(
-        spark,
-        log.store,
-        log.log_path,
-        snap.version,
-        snap,
-        st.protocol,
-        st.metadata,
-        list(st.set_transactions.values()),
-        list(st.tombstones.values()),
-        max_actions_per_part=1,  # force one add per part
-    )
-    n_adds = len(st.active_files)
-    assert meta.parts == 1 + n_adds
-    names = os.listdir(os.path.join(path, "_delta_log"))
-    assert (
-        sum(1 for n in names if ".checkpoint." in n and n.endswith(".parquet"))
-        == meta.parts
-    )
-    assert not any(n.startswith("_staging_checkpoint") for n in names)
-    # fresh open anchors at the multi-part checkpoint; full state parity
-    snap2 = DeltaLog.for_table(path).snapshot()
-    assert snap2.segment.checkpoint_version == snap.version
-    assert len(snap2.segment.checkpoints) == meta.parts
-    by_path = {a.path: a for a in snap.all_files()}
-    by_path2 = {a.path: a for a in snap2.all_files()}
-    assert by_path.keys() == by_path2.keys()
-    for p, a in by_path.items():
-        b = by_path2[p]
-        assert (a.partition_values, a.size, a.stats) == (
-            b.partition_values, b.size, b.stats,
-        )
-    assert {r.path for r in snap2.tombstones()} == {
-        r.path for r in snap.tombstones()
-    }
-    assert snap2.to_df(spark).count() == snap.to_df(spark).count() == 2
-    # and the table keeps working past the checkpoint anchor
-    t.append(spark.createDataFrame([(9, "b")], "k long, par string"))
-    assert DeltaTable.for_path(spark, path).to_df().count() == 3
-
-
-def test_distributed_checkpoint_survives_inflated_estimate(spark, tmp_path):
-    """The distributed-state tier passes an ESTIMATED n_adds (checkpoint
-    rows + tail lines — an over-count after a mass DELETE).  Spark skips
-    part files for empty shuffle partitions, so fewer parts than the
-    estimate-derived target can land; the checkpoint group must be named
-    for what was actually written, not raise and break interval
-    checkpointing forever."""
-    import os
-
-    from delta_go_spark import checkpoint as ckpt_mod
-    from delta_go_spark.log import DeltaLog
-
-    path = str(tmp_path / "dckpt3")
-    DeltaTable.create(
-        spark,
-        path,
-        spark.createDataFrame([(i,) for i in range(20)], "k long"),
-    )
-    t = DeltaTable.for_path(spark, path)
-    t.delete_where("k > 0")  # mass delete: 1 add survives, many removes
-    log = DeltaLog.for_table(path)
-    snap = log.update()
-    st = snap.state()
-    meta = ckpt_mod.write_checkpoint_spark(
-        spark,
-        log.store,
-        log.log_path,
-        snap.version,
-        snap,
-        st.protocol,
-        st.metadata,
-        list(st.set_transactions.values()),
-        list(st.tombstones.values()),
-        max_actions_per_part=1,
-        n_adds=50,  # inflated estimate -> 50-part target, ~1 actual add
-    )
-    names = os.listdir(os.path.join(path, "_delta_log"))
-    group = [n for n in names if ".checkpoint." in n and n.endswith(".parquet")]
-    assert len(group) == meta.parts  # named for what was written
-    assert meta.parts < 51
-    assert not any(n.startswith("_staging_checkpoint") for n in names)
-    snap2 = DeltaLog.for_table(path).snapshot()
-    assert snap2.segment.checkpoint_version == snap.version
-    assert {a.path for a in snap2.all_files()} == {
-        a.path for a in snap.all_files()
-    }
-    assert snap2.to_df(spark).count() == 1
-
-
-def test_distributed_checkpoint_threshold_wiring(spark, tmp_path):
-    """At or above spark.delta_go.state.distributedFileThreshold the
-    postCommit checkpoint goes through the Spark-job writer (multi-part
-    group appears at the checkpointInterval boundary)."""
-    import os
-
-    from delta_go_spark.snapshot import DISTRIBUTED_STATE_THRESHOLD_CONF
-
-    path = str(tmp_path / "dckpt2")
-    old = spark.conf.get(DISTRIBUTED_STATE_THRESHOLD_CONF, None)
-    spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, "1")
-    try:
-        DeltaTable.create(
-            spark,
-            path,
-            spark.range(10).select(F.col("id").alias("k")),
-            configuration={"delta.checkpointInterval": "2"},
-        )
-        t = DeltaTable.for_path(spark, path)
-        t.append(spark.range(10, 20).select(F.col("id").alias("k")))
-        t.append(spark.range(20, 30).select(F.col("id").alias("k")))
-    finally:
-        if old is None:
-            spark.conf.unset(DISTRIBUTED_STATE_THRESHOLD_CONF)
-        else:
-            spark.conf.set(DISTRIBUTED_STATE_THRESHOLD_CONF, old)
-    names = os.listdir(os.path.join(path, "_delta_log"))
-    multi = [n for n in names if ".checkpoint.0000000" in n]
-    assert multi, names  # multi-part group written at version 2
-    assert DeltaTable.for_path(spark, path).to_df().count() == 30
-
-
 def test_restore_to_earlier_version(spark, tmp_path):
     from delta_go_spark.maintenance import restore
 
@@ -779,112 +626,6 @@ def test_compute_stats_conflicts_with_concurrent_delete(
         m.compute_stats(None, path)  # spark=None forces the driver loop
     # the delete stands; nothing was resurrected
     assert DeltaTable.for_path(spark, path).to_df().count() == 0
-
-
-class _FileUriStore:
-    """LogStore facade that accepts file://-prefixed paths — stands in
-    for a cloud store so write_checkpoint_spark's NON-local branch
-    (Hadoop staging listing + JVM rename, checkpoint.py) runs against the
-    local filesystem with no emulator.  Deliberately NOT a LocalStore
-    subclass: the writer and the parquet opener must take their
-    object-store code paths (write_bytes part emission, ranged reads)."""
-
-    def __init__(self):
-        from delta_go_spark.store import LocalStore
-
-        self._inner = LocalStore("/")
-
-    @staticmethod
-    def _p(path):
-        return path[len("file://"):] if path.startswith("file://") else path
-
-    def read(self, path):
-        return self._inner.read(self._p(path))
-
-    def write(self, path, lines, overwrite=False):
-        return self._inner.write(self._p(path), lines, overwrite)
-
-    def write_bytes(self, path, data, overwrite=False):
-        return self._inner.write_bytes(self._p(path), data, overwrite)
-
-    def read_bytes(self, path):
-        return self._inner.read_bytes(self._p(path))
-
-    def read_range(self, path, start, length):
-        with open(self._p(path), "rb") as f:
-            f.seek(start)
-            return f.read(length)
-
-    def size_of(self, path):
-        import os
-
-        return os.path.getsize(self._p(path))
-
-    def list_from(self, path):
-        return self._inner.list_from(self._p(path))
-
-
-def test_distributed_checkpoint_cloud_branch_rename_contract(spark, tmp_path):
-    """The writer's non-local branch end-to-end without emulators: a
-    file:// log URI routes staging enumeration through hadoop_list_files
-    and part placement through JVM FileSystem.rename — pinning the
-    rename/contiguity contract (all parts land, staging vanishes,
-    _last_checkpoint.size exact) for the cloud code path."""
-    import os
-
-    from delta_go_spark import checkpoint as ckpt_mod
-    from delta_go_spark.log import DeltaLog
-
-    path = str(tmp_path / "cloudckpt")
-    DeltaTable.create(
-        spark,
-        path,
-        spark.createDataFrame(
-            [(i, "a" if i % 2 else "b") for i in range(12)], "k long, par string"
-        ),
-        partition_by=["par"],
-    )
-    t = DeltaTable.for_path(spark, path)
-    for i in range(3):
-        t.append(spark.createDataFrame([(50 + i, "a")], "k long, par string"))
-    t.delete_where("k < 6")  # tombstones must survive the roundtrip
-    log = DeltaLog.for_table(path)
-    snap = log.update()
-    st = snap.state()
-
-    store = _FileUriStore()
-    meta = ckpt_mod.write_checkpoint_spark(
-        spark,
-        store,
-        "file://" + log.log_path,
-        snap.version,
-        snap,
-        st.protocol,
-        st.metadata,
-        list(st.set_transactions.values()),
-        list(st.tombstones.values()),
-        max_actions_per_part=2,  # force several parts
-    )
-    n_adds = len(st.active_files)
-    assert meta.parts == 1 + -(-n_adds // 2)
-    assert meta.size == 2 + len(st.tombstones) + n_adds  # exact, footer-counted
-    names = os.listdir(os.path.join(path, "_delta_log"))
-    assert (
-        sum(1 for n in names if ".checkpoint." in n and n.endswith(".parquet"))
-        == meta.parts
-    )
-    assert not any(n.startswith("_staging_checkpoint") for n in names)
-    # a fresh plain-path reader anchors on the group and reproduces state
-    snap2 = DeltaLog.for_table(path).snapshot()
-    assert snap2.segment.checkpoint_version == snap.version
-    assert len(snap2.segment.checkpoints) == meta.parts
-    assert {a.path for a in snap2.all_files()} == {
-        a.path for a in st.active_files.values()
-    }
-    assert {r.path for r in snap2.tombstones()} == {
-        r.path for r in st.tombstones.values()
-    }
-    assert snap2.to_df(spark).count() == snap.to_df(spark).count()
 
 
 def test_zorder_improves_stats_skipping(spark, tmp_path):

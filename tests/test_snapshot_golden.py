@@ -168,22 +168,73 @@ def test_table_exists():
         assert not DeltaLog.for_table(d).table_exists()
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["checkpoint", "125-iterator-bug", "delete-re-add-same-file-different-transactions", "snapshot-data2-deleted"],
-)
-def test_active_files_df_matches_python_fold(spark, name):
-    """The Spark-job state reconstruction (scale path) must agree with the
-    driver-side Python fold on every golden log shape: checkpoint-anchored,
-    checkpoint+tail, re-add, deletes."""
-    from delta_go_spark.snapshot import checkpoint_adds_df
+def test_fold_dedups_on_canonical_path(tmp_path):
+    """An AddFile logged relative + percent-encoded and its RemoveFile
+    logged as an absolute file: URI are the SAME file (resolver.go:87-126
+    semantics, '-escaped-chars' golden fixtures); the fold must key its
+    newest-wins replay on the canonical path, or the deleted file
+    resurrects."""
+    import json as _json
 
-    snap = DeltaLog.for_table(golden(name)).snapshot()
-    py_paths = sorted(a.path for a in snap.all_files())
-    df_paths = sorted(
-        r["path"] for r in checkpoint_adds_df(spark, snap).select("add.path").collect()
+    root = str(tmp_path / "mixed")
+    log_dir = tmp_path / "mixed" / "_delta_log"
+    log_dir.mkdir(parents=True)
+    schema = _json.dumps(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+            ],
+        }
     )
-    assert df_paths == py_paths
+    v0 = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {
+            "metaData": {
+                "id": "m-1",
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": schema,
+                "partitionColumns": [],
+                "configuration": {},
+            }
+        },
+        {
+            "add": {
+                "path": "a%20b.parquet",
+                "partitionValues": {},
+                "size": 1,
+                "modificationTime": 1,
+                "dataChange": True,
+            }
+        },
+        {
+            "add": {
+                "path": "keep.parquet",
+                "partitionValues": {},
+                "size": 2,
+                "modificationTime": 1,
+                "dataChange": True,
+            }
+        },
+    ]
+    v1 = [
+        {
+            "remove": {
+                "path": f"file://{root}/a b.parquet",
+                "deletionTimestamp": 2,
+                "dataChange": True,
+            }
+        }
+    ]
+    (log_dir / "00000000000000000000.json").write_text(
+        "\n".join(_json.dumps(a) for a in v0) + "\n"
+    )
+    (log_dir / "00000000000000000001.json").write_text(
+        "\n".join(_json.dumps(a) for a in v1) + "\n"
+    )
+
+    snap = DeltaLog.for_table(root).snapshot()
+    assert sorted(a.path for a in snap.all_files()) == ["keep.parquet"]
 
 
 def test_many_commit_log_loads_from_checkpoint_tail(tmp_path):
