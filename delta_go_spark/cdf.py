@@ -14,65 +14,25 @@ copy-on-write invariant).  That covers appends and whole-file deletes
 exactly; a rewrite commit from a pre-CDF UPDATE shows as delete+insert of
 the rewritten rows, which is a faithful (if coarser) change set.
 
-Scale: three scans regardless of version count — all cdc files in one
-read, all non-cdc adds in one, all non-cdc removes in one — each with a
-broadcast path->version map joined via input_file_name.
+Scale: at most four scans regardless of version count — Hive-layout cdc
+files, legacy cdc files, non-cdc adds and non-cdc removes.  Each is one
+datareader.read_files_with_pv call: the scan paths come from
+datareader.scan_paths, and partition values and `_commit_version` attach
+through that reader's single broadcast join on the decoded file name.
+This module never spells a scan path or decodes Spark's file name itself.
 """
 
 from __future__ import annotations
 
-from urllib.parse import quote
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField
+from pyspark.sql.types import StringType, StructField, StructType
 
 from delta_go_spark.actions import AddCDCFile, AddFile, RemoveFile
-from delta_go_spark.datareader import files_to_df
+from delta_go_spark.datareader import COMMIT_VERSION_COL
 from delta_go_spark.log import DeltaLog
 from delta_go_spark.snapshot import canonicalize_path
 from delta_go_spark.writer import CHANGE_TYPE_COL
-
-# Characters java.net.URI leaves unescaped in a path component (RFC 2396
-# mark + reserved-in-path set).  input_file_name() returns Hadoop Path URIs
-# percent-encoded with exactly this safe set (space -> %20, '%' -> %25),
-# so mapping keys must be encoded the same way to join against it.
-_URI_PATH_SAFE = "/:@!$&'()*+,;=~-._"
-
-
-def _with_version(df: DataFrame, version_of: dict[str, int]) -> DataFrame:
-    """Attach `_commit_version` by broadcast-joining a 2-column
-    (file URI, version) relation on ``input_file_name()``.
-
-    The mapping is DATA, not plan: plan size stays O(1) however many files
-    the version range touched.  (A month-long CDF range on a 100 TB table
-    can span millions of changed files; the previous ``F.create_map`` of
-    2x-that-many literals stalled Catalyst on the driver long before any
-    executor ran.)  Each path is keyed under both its raw and its
-    percent-encoded URI spelling, because input_file_name() emits Hadoop's
-    URI-encoded form — a partition value with a space yields ``%20`` in
-    the scan's file name but not in the AddFile path."""
-    spark = df.sparkSession
-    keyed: dict[str, int] = {}
-    # ENCODED spellings first, raw second and only when absent:
-    # input_file_name() reports Hadoop's percent-encoded form, so when one
-    # file's RAW path equals another's ENCODED spelling (literal '%20' vs
-    # a real space) the scan only ever emits the encoded reading — the
-    # encoded owner's version must win the collision.  Raw keys remain as
-    # a defensive fallback for spellings the safe-set model misses.
-    for p, v in version_of.items():
-        keyed.setdefault("file://" + quote(p, safe=_URI_PATH_SAFE), v)
-    for p, v in version_of.items():
-        keyed.setdefault(f"file://{p}", v)
-    mapping = spark.createDataFrame(
-        sorted(keyed.items()), "_dgs_input_file string, _dgs_commit_version long"
-    )
-    return (
-        df.withColumn("_dgs_input_file", F.input_file_name())
-        .join(F.broadcast(mapping), on="_dgs_input_file", how="left")
-        .drop("_dgs_input_file")
-        .withColumnRenamed("_dgs_commit_version", "_commit_version")
-    )
 
 
 def cdf_entries(
@@ -142,7 +102,7 @@ def table_changes(
     Timestamp bounds (epoch millis, Delta's TVF semantics) may replace the
     version bounds: start = first commit at-or-after start_timestamp, end
     = last commit at-or-before end_timestamp."""
-    from delta_go_spark.store import is_cloud_uri, normalize_table_uri
+    from delta_go_spark.store import normalize_table_uri
 
     table_path = normalize_table_uri(table_path)
     log = DeltaLog.for_table(table_path)
@@ -159,7 +119,6 @@ def table_changes(
     meta = snap.metadata()
     schema = meta.schema()
     pcols = list(meta.partition_columns or [])
-    cloud = is_cloud_uri(table_path)
 
     pushed = None
     if predicate is not None and pcols:
@@ -177,12 +136,6 @@ def table_changes(
         record = {k.lower(): v for k, v in pv.items()}
         return pushed.eval(record) is not True
 
-    cdc_version: dict[str, int] = {}
-    cdc_pv: dict[str, dict] = {}
-    add_version: dict[str, int] = {}
-    adds: list[AddFile] = []
-    rm_version: dict[str, int] = {}
-    removed: list[AddFile] = []
     end_excl = end_version + 1 if end_version is not None else None
     if start_from_timestamp and start_version > snap.version:
         # a TIMESTAMP bound past the tip means "no changes yet" — empty
@@ -197,81 +150,54 @@ def table_changes(
             )
             if not pruned_out(e[1])
         ]
-    # The path the Spark scan actually reads (and input_file_name reports):
-    # the canonical path locally, the local cache entry for a connector-less
-    # cloud table — localized in ONE parallel batch, not a GET per entry.
-    if cloud:
-        from delta_go_spark.datacloud import use_native_cloud
+    from delta_go_spark.datareader import read_files_with_pv, scan_paths
 
-        if use_native_cloud(spark, table_path):
-            # connector present: the scan reads the remote URIs directly
-            scan_paths = [e[0] for e in entries]
-        else:
-            from delta_go_spark.datacache import localize
+    # Scan paths for every surviving entry in ONE batch (a connector-less
+    # cloud table downloads them in parallel; pruned files never are).
+    # Per change type: scan path -> (partitionValues, latest version).
+    paths = scan_paths(spark, table_path, [e[0] for e in entries], log.store)
+    by_type: dict[str | None, dict[str, tuple[dict, int]]] = {}
+    for (_, pv, ctype, version, _size), p in zip(entries, paths):
+        by_type.setdefault(ctype, {})[p] = (pv, version)
 
-            scan_paths = localize([e[0] for e in entries], log.store)
-    else:
-        scan_paths = [e[0].replace("file://", "") for e in entries]
-    for (path, pv, ctype, version, _size), p in zip(entries, scan_paths):
-        if ctype is None:
-            cdc_version[p] = version
-            cdc_pv[p] = pv
-        elif ctype == "insert":
-            add_version[p] = version
-            adds.append(
-                AddFile(path=path, partition_values=pv, size=0,
-                        modification_time=0, data_change=True)
-            )
-        else:  # delete
-            rm_version[p] = version
-            removed.append(
-                AddFile(path=path, partition_values=pv, size=0,
-                        modification_time=0, data_change=True)
-            )
+    out_schema = StructType(
+        [*schema.fields, StructField(CHANGE_TYPE_COL, StringType())]
+    )
 
-    out_schema = schema.add(StructField(CHANGE_TYPE_COL, StringType()))
+    def read(group: dict[str, tuple[dict, int]], read_schema, read_pcols):
+        return read_files_with_pv(
+            spark,
+            read_schema,
+            read_pcols,
+            [(p, pv) for p, (pv, _) in group.items()],
+            [v for _, v in group.values()],
+        )
+
     parts: list[DataFrame] = []
-    if cdc_version:
-        # Hive-layout cdc files (complete partitionValues, written by the
-        # current staging) get the columns injected from the log; legacy
-        # cdc files recorded {} and embed partition columns physically.
-        hive = [
-            p
-            for p in sorted(cdc_version)
-            if pcols and all(c in cdc_pv[p] for c in pcols)
-        ]
-        phys = sorted(set(cdc_version) - set(hive))
-        if hive:
-            from delta_go_spark.datareader import read_files_with_pv
-
-            cdc_df = read_files_with_pv(
-                spark, out_schema, pcols, [(p, cdc_pv[p]) for p in hive]
-            )
-            parts.append(
-                _with_version(cdc_df, {p: cdc_version[p] for p in hive})
-            )
-        if phys:
-            cdc_df = spark.read.schema(out_schema).parquet(*phys)
-            parts.append(
-                _with_version(cdc_df, {p: cdc_version[p] for p in phys})
-            )
-    if adds:
-        df = files_to_df(spark, snap, adds).withColumn(
-            CHANGE_TYPE_COL, F.lit("insert")
+    cdc = by_type.pop(None, {})
+    # Hive-layout cdc files (complete partitionValues, written by the
+    # current staging) get the columns injected from the log; legacy cdc
+    # files recorded {} and embed partition columns physically.
+    hive = {
+        p: e for p, e in cdc.items() if pcols and all(c in e[0] for c in pcols)
+    }
+    phys = {p: e for p, e in cdc.items() if p not in hive}
+    if hive:
+        parts.append(read(hive, out_schema, pcols))
+    if phys:
+        parts.append(read(phys, out_schema, []))
+    for ctype, group in by_type.items():
+        parts.append(
+            read(group, schema, pcols).withColumn(CHANGE_TYPE_COL, F.lit(ctype))
         )
-        parts.append(_with_version(df, add_version))
-    if removed:
-        df = files_to_df(spark, snap, removed).withColumn(
-            CHANGE_TYPE_COL, F.lit("delete")
-        )
-        parts.append(_with_version(df, rm_version))
 
     if not parts:
         empty = spark.createDataFrame([], out_schema)
-        return empty.withColumn("_commit_version", F.lit(0).cast("long"))
+        return empty.withColumn(COMMIT_VERSION_COL, F.lit(0).cast("long"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
+    out = out.select(*out_schema.names, COMMIT_VERSION_COL)
     if predicate is not None:
         # row-level filter on top of the file-level prune (same layering as
         # DeltaScan.to_df — the pushed conjunct re-applies for free)

@@ -1,28 +1,43 @@
-"""Data plane: turn a snapshot's active file list into a DataFrame.
+"""Data plane: turn log file lists into DataFrames.
 
 The reference stops at the file list (README.md:14-16); this module is the
-compute engine it delegates to.  Design for scale:
+compute engine it delegates to, and the ONLY module of the Spark data plane
+that knows a data file's identity on both sides of the boundary:
 
-- ONE `spark.read.parquet` over all surviving files — never a read per
-  file/partition (a union of thousands of scans would defeat Catalyst).
-- Partition columns are injected from the LOG's partitionValues (the
-  canonical source per the Delta protocol) via a broadcast map-join on
-  input_file_name() — O(#files) broadcast, zero extra shuffle of data rows.
-- The declared schema is enforced (schemaString is authoritative), so
-  column pruning/pushdown work against the true types.
+- `scan_paths`: the path a Spark scan reads for a canonical log path — the
+  local path, the remote URI when the scheme's Hadoop connector serves the
+  scan, or the local cache copy (datacache.py) when it does not.
+- `file_name`: Spark's reported file name (input_file_name(), a
+  percent-encoded Hadoop URI) decoded back to that scan path.
+- `read_files_with_pv`: per-file values — the LOG's partitionValues (the
+  canonical source per the Delta protocol) and, for change feeds,
+  `_commit_version` — attached by ONE broadcast join on `file_name()`:
+  O(#files) broadcast data, O(1) plan, zero extra shuffle of data rows.
+
+DML, MERGE, changes_df and table_changes all go through these, so a
+partition value with a space, non-ASCII, '%' or '+' resolves the same way
+everywhere.  (datasource._readable_paths is the one exception: it runs in
+a Python planning worker with no JVM handle.)
+
+Design for scale: ONE `spark.read.parquet` over all surviving files, never
+a read per file or partition; the declared schema is enforced
+(schemaString is authoritative), so column pruning and pushdown work
+against the true types.
 """
 
 from __future__ import annotations
 
-import os
-from urllib.parse import unquote
+from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from delta_go_spark.actions import AddFile
 from delta_go_spark.snapshot import Snapshot, canonicalize_path
+
+# The per-file change-feed column read_files_with_pv attaches.
+COMMIT_VERSION_COL = "_commit_version"
 
 
 def _data_schema(full: StructType, partition_cols: list[str]) -> StructType:
@@ -30,57 +45,82 @@ def _data_schema(full: StructType, partition_cols: list[str]) -> StructType:
     return StructType([f for f in full.fields if f.name.lower() not in pset])
 
 
+def scan_paths(
+    spark: SparkSession, table_root: str, canonical: list[str], store=None
+) -> list[str]:
+    """The path the scan reads for each canonical log path, in order.
+
+    A cloud table whose scheme has a Hadoop connector (probed once per
+    scheme, see datacloud.py) passes its URIs straight through: executors
+    stream ranged reads from the object store and no byte crosses the
+    driver.  Without a connector each object is read from its local cache
+    copy, downloaded here in one parallel batch if missing."""
+    from delta_go_spark.datacache import is_cloud_uri, localize
+    from delta_go_spark.datacloud import use_native_cloud
+
+    if not is_cloud_uri(table_root) or use_native_cloud(spark, table_root):
+        return list(canonical)
+    return localize(canonical, store)
+
+
+def file_name() -> Column:
+    """The current row's file, as the path `scan_paths` gave the scan.
+
+    input_file_name() reports a percent-encoded URI (a space is %20, '%'
+    is %25, non-ASCII stays literal): strip the file: scheme, collapse the
+    authority slashes and %-decode, escaping '+' first, which url_decode
+    would otherwise turn into a space."""
+    return F.url_decode(
+        F.regexp_replace(
+            F.regexp_replace(F.input_file_name(), "^file:/+", "/"), r"\+", "%2B"
+        )
+    )
+
+
 def read_files_with_pv(
     spark: SparkSession,
     schema: StructType,
     pcols: list[str],
     files: list[tuple[str, dict]],
+    versions: list[int] | None = None,
 ) -> DataFrame:
-    """One scan over already-readable paths with partition columns injected
-    from the supplied (path -> partitionValues) mapping — the log is the
-    canonical source of partition values per the Delta protocol.  Shared by
-    snapshot reads and the hive-partitioned CDF read."""
+    """One scan over (scan path, partitionValues) pairs, with partition
+    columns injected from the supplied values — the log is the canonical
+    source per the Delta protocol.  With `versions` (one per file), the
+    result also carries a `_commit_version` column from the same join."""
+    out_schema = schema
+    if versions is not None:
+        out_schema = StructType(
+            [*schema.fields, StructField(COMMIT_VERSION_COL, LongType())]
+        )
     paths = [p for p, _ in files]
     if not paths:
-        return spark.createDataFrame([], schema)
-    if not pcols:
+        return spark.createDataFrame([], out_schema)
+    if not pcols and versions is None:
         return spark.read.schema(schema).parquet(*paths)
 
-    data_schema = _data_schema(schema, pcols)
-    df = spark.read.schema(data_schema).parquet(*paths)
+    df = spark.read.schema(_data_schema(schema, pcols)).parquet(*paths)
 
-    # (decoded absolute path -> partition values) broadcast mapping.  Both
-    # sides are normalized to a plain decoded filesystem path, so no
-    # URI-encoding table needs replicating.
-    rows = []
-    for p, pv in files:
-        pv = pv or {}
-        rows.append((p, *[pv.get(c) for c in pcols]))
-    from pyspark.sql.types import StructField
-
-    map_schema = StructType(
-        [StructField("_pv_file", StringType(), False)]
-        + [StructField(f"_pv_{c}", StringType(), True) for c in pcols]
-    )
-    pv_df = spark.createDataFrame(rows, map_schema)
+    # (decoded scan path -> per-file values) broadcast mapping: the mapping
+    # is data, not plan, so the plan stays O(1) however many files
+    rows = [(p, *[(pv or {}).get(c) for c in pcols]) for p, pv in files]
+    fields = [StructField("_pv_file", StringType(), False)] + [
+        StructField(f"_pv_{c}", StringType(), True) for c in pcols
+    ]
+    if versions is not None:
+        rows = [(*r, v) for r, v in zip(rows, versions)]
+        fields.append(StructField(COMMIT_VERSION_COL, LongType(), True))
+    pv_df = spark.createDataFrame(rows, StructType(fields))
 
     field_by_lower = {f.name.lower(): f for f in schema.fields}
-    # input_file_name() -> decoded path: strip file: scheme, collapse the
-    # authority slashes, %-decode (pre-escaping '+' which url_decode would
-    # otherwise turn into a space).
-    decoded = F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.input_file_name(), "^file:/+", "/"), r"\+", "%2B"
-        )
-    )
-    df = df.withColumn("_pv_file", decoded).join(
+    df = df.withColumn("_pv_file", file_name()).join(
         F.broadcast(pv_df), on="_pv_file", how="left"
     )
     for c in pcols:
         declared = field_by_lower[c.lower()]
         raw = F.nullif(F.col(f"_pv_{c}"), F.lit(""))  # empty string = NULL (record.go:34-45)
         df = df.withColumn(c, raw.cast(declared.dataType))
-    return df.select(*[f.name for f in schema.fields])
+    return df.select(*[f.name for f in out_schema.fields])
 
 
 def files_to_df(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -> DataFrame:
@@ -88,38 +128,33 @@ def files_to_df(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -
     schema = meta.schema()
     if schema is None:
         raise ValueError("snapshot has no schema")
-    pcols = meta.partition_columns
-
-    paths = [canonicalize_path(a.path, snapshot.table_root) for a in files]
-    if not paths:
-        return spark.createDataFrame([], schema)
-
-    # Cloud table: with the scheme's Hadoop connector available (probed
-    # once per scheme, or forced via spark.delta_go.nativeCloud /
-    # DGS_NATIVE_CLOUD), the URIs pass STRAIGHT THROUGH — executors
-    # stream ranged reads from the object store and no byte crosses the
-    # driver.  Only without a connector does the SDK localize() fallback
-    # materialize the files into the local cache.
-    from delta_go_spark.datacache import is_cloud_uri, localize
-    from delta_go_spark.datacloud import use_native_cloud
-
-    if is_cloud_uri(snapshot.table_root) and not use_native_cloud(
-        spark, snapshot.table_root
-    ):
-        paths = localize(paths, getattr(snapshot, "store", None))
-
+    paths = _scan_paths_of(spark, snapshot, files)
     return read_files_with_pv(
         spark,
         schema,
-        pcols,
+        meta.partition_columns,
         [(p, a.partition_values or {}) for a, p in zip(files, paths)],
     )
 
 
+def _scan_paths_of(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -> list[str]:
+    root = snapshot.table_root
+    return scan_paths(
+        spark,
+        root,
+        [canonicalize_path(a.path, root) for a in files],
+        getattr(snapshot, "store", None),
+    )
+
+
+def files_named(
+    spark: SparkSession, snapshot: Snapshot, files: list[AddFile], names: Iterable[str]
+) -> list[AddFile]:
+    """The entries of `files` (the files a scan over the same snapshot
+    read) whose scan path is among `names`, values of `file_name()`."""
+    names = set(names)
+    return [a for a, p in zip(files, _scan_paths_of(spark, snapshot, files)) if p in names]
+
+
 def snapshot_to_df(snapshot: Snapshot, spark: SparkSession) -> DataFrame:
     return files_to_df(spark, snapshot, snapshot.all_files())
-
-
-def uri_variants(path: str) -> list[str]:
-    """Canonical + decoded variants for matching."""
-    return [path, unquote(path)]

@@ -230,7 +230,12 @@ def _readable_paths(
     that driver-process register_store bindings are not visible in this
     worker; SDK reads through this surface need real credentials/endpoint
     env — the DeltaTable API sees in-process fakes, format("delta_go")
-    does not."""
+    does not.
+
+    This is the one scan-path rule outside datareader.scan_paths: without
+    a JVM handle this worker cannot probe the scheme's Hadoop connector,
+    and pyarrow, not Spark, opens the files, so no reported file name ever
+    needs decoding here."""
     from delta_go_spark.datacache import is_cloud_uri, localize
     from delta_go_spark.datacloud import use_native_cloud
 
@@ -1009,7 +1014,10 @@ def _partition_value_str(v) -> str | None:
     if isinstance(v, pd.Timestamp):
         v = v.to_pydatetime()
     if isinstance(v, datetime.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
+        # protocol form YYYY-MM-DD HH:MM:SS[.ffffff]: every microsecond
+        # kept, so the partition value equals the row's value
+        fmt = "%Y-%m-%d %H:%M:%S.%f" if v.microsecond else "%Y-%m-%d %H:%M:%S"
+        return v.strftime(fmt)
     if isinstance(v, datetime.date):
         return v.isoformat()
     if isinstance(v, bool):

@@ -7,8 +7,12 @@ compute engine, Spark-first:
 - Candidate files come from the pruned scan (partition + min/max stats
   skipping), so untouched files are never read, let alone rewritten.
 - Touched files are identified by running the predicate over the candidate
-  scan with input_file_name() — one Spark job that reads only candidate
-  files and returns a small path list to the driver (O(#files), not rows).
+  scan and collecting each matching row's file — one Spark job that reads
+  only candidate files and returns a small path list to the driver
+  (O(#files), not rows).  datareader.py owns both halves of that match:
+  which path the scan reads for a log file (`files_named`) and how Spark's
+  reported file name decodes back to it (`file_name`); this module never
+  spells a path itself.
 - Rewrites read ONLY touched files, apply the row transform, and stage new
   parquet; the commit removes touched files and adds rewritten ones in one
   atomic transaction with the proper operation name, protected by
@@ -24,19 +28,15 @@ copy-on-write + file skipping), never with table size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from urllib.parse import unquote
 
 from delta_go_spark import config as cfg
 from delta_go_spark import ops
 from delta_go_spark.actions import AddFile
 from delta_go_spark.expressions import Expression
 from delta_go_spark.log import DeltaLog
-from delta_go_spark.snapshot import DeltaError, canonicalize_path
+from delta_go_spark.snapshot import DeltaError
 from delta_go_spark.writer import (
     CHANGE_TYPE_COL,
     apply_generated_columns,
@@ -73,34 +73,15 @@ def _has_constraints(snap) -> bool:
     )
 
 
-def _scan_path(canonical: str, table_root: str) -> str:
-    """The filesystem path the Spark scan actually reads for a canonical
-    log path: the path itself locally, the remote URI itself when the
-    scheme's Hadoop connector serves the scan natively, or the
-    deterministic local cache entry for a connector-less cloud table
-    (input_file_name() reports whichever one the scan touched)."""
-    from delta_go_spark.datacache import cache_path, is_cloud_uri
-
-    if is_cloud_uri(table_root):
-        from pyspark.sql import SparkSession
-
-        from delta_go_spark.datacloud import use_native_cloud
-
-        if use_native_cloud(SparkSession.getActiveSession(), table_root):
-            return canonical
-        return cache_path(canonical)
-    return canonical.replace("file://", "")
-
-
 def _touched_paths(
     spark: SparkSession, snapshot, candidates: list[AddFile], predicate
 ) -> tuple[list[AddFile], DataFrame]:
     """Which candidate files actually contain rows matching `predicate`?
 
     Returns (touched AddFiles, DataFrame over exactly those files).  The
-    match test is one aggregate over input_file_name() — reads candidate
-    files once, returns only distinct paths to the driver."""
-    from delta_go_spark.datareader import files_to_df
+    match test is one aggregate over datareader.file_name() — reads
+    candidate files once, returns only distinct paths to the driver."""
+    from delta_go_spark.datareader import file_name, files_named, files_to_df
 
     if not candidates:
         return [], None
@@ -112,20 +93,11 @@ def _touched_paths(
     # Row-object batch from a collect() is not.
     matched_rows = (
         df.filter(predicate)
-        .select(F.input_file_name().alias("_f"))
+        .select(file_name().alias("_f"))
         .distinct()
         .toLocalIterator()
     )
-    # input_file_name() returns percent-encoded URIs (space -> %20); the
-    # log's canonical paths are decoded — normalize before comparing, or a
-    # partition value with a space silently no-ops the whole statement.
-    matched_paths = {unquote(r["_f"].replace("file://", "")) for r in matched_rows}
-    root = snapshot.table_root
-    touched = [
-        a
-        for a in candidates
-        if _scan_path(canonicalize_path(a.path, root), root) in matched_paths
-    ]
+    touched = files_named(spark, snapshot, candidates, (r["_f"] for r in matched_rows))
     if not touched:
         return [], None
     return touched, files_to_df(spark, snapshot, touched)
@@ -548,7 +520,7 @@ class DeltaDml:
         else:
             key_counts = None
             keys = source.select(on).distinct()
-        from delta_go_spark.datareader import files_to_df
+        from delta_go_spark.datareader import file_name, files_named, files_to_df
 
         target_df = files_to_df(self.spark, snap, candidates) if candidates else None
         # One measured size estimate for the source batch, shared by every
@@ -573,24 +545,20 @@ class DeltaDml:
             )
         touched: list[AddFile] = []
         if target_df is not None:
-            # input_file_name() must bind to the TARGET scan before the
-            # join: selected after it, Spark rejects the expression as
+            # The file name must bind to the TARGET scan before the join:
+            # selected after it, Spark rejects the file-name expression as
             # ambiguous whenever the source is itself file-backed (e.g.
             # merging from another Delta table) — MULTI_SOURCES_UNSUPPORTED.
             semi = (
-                target_df.withColumn("_f", F.input_file_name())
+                target_df.withColumn("_f", file_name())
                 .join(broadcast_if_small(keys, src_est_bytes), on, "left_semi")
                 .select("_f")
                 .distinct()
                 .toLocalIterator()
             )
-            matched_paths = {unquote(r["_f"].replace("file://", "")) for r in semi}
-            root = snap.table_root
-            touched = [
-                a
-                for a in candidates
-                if _scan_path(canonicalize_path(a.path, root), root) in matched_paths
-            ]
+            touched = files_named(
+                self.spark, snap, candidates, (r["_f"] for r in semi)
+            )
         pcols = snap.metadata().partition_columns
         clock_ms = log.clock.now_millis()
         cdf = _cdf_enabled(snap)

@@ -47,8 +47,9 @@ class ExpressionError(ValueError):
 def parse_partition_value(raw: str | None, dtype: DataType) -> Any:
     """Delta partition-value string parsing (reference: record.go:34-159).
 
-    Empty string and None are NULL; timestamps use 'YYYY-MM-DD HH:MM:SS',
-    dates 'YYYY-MM-DD'; complex types are unsupported as partition values.
+    Empty string and None are NULL; timestamps use 'YYYY-MM-DD HH:MM:SS'
+    with an optional fraction of up to six digits, dates 'YYYY-MM-DD';
+    complex types are unsupported as partition values.
     """
     if raw is None or raw == "":
         return None
@@ -65,7 +66,8 @@ def parse_partition_value(raw: str | None, dtype: DataType) -> Any:
     if isinstance(dtype, DateType):
         return _dt.date.fromisoformat(raw)
     if isinstance(dtype, TimestampType):
-        return _dt.datetime.strptime(raw, "%Y-%m-%d %H:%M:%S")
+        fmt = "%Y-%m-%d %H:%M:%S.%f" if "." in raw else "%Y-%m-%d %H:%M:%S"
+        return _dt.datetime.strptime(raw, fmt)
     if isinstance(dtype, BinaryType):
         return raw.encode("utf-8")
     raise ExpressionError(f"unsupported partition value type: {dtype.simpleString()}")

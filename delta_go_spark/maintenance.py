@@ -138,45 +138,33 @@ def changes_df(
     """Row-level change feed for append-style commits: rows of every file
     ADDED at each version >= start_version, with _commit_version.
 
-    One scan over all added files (partition values injected from the log,
-    like any snapshot read) with a broadcast path->version map joined via
-    input_file_name — single job regardless of version count.
+    One scan over all added files: partition values and the version that
+    last added each file attach through datareader's one broadcast join,
+    a single job regardless of version count.
     """
-    from delta_go_spark.datareader import files_to_df
+    from delta_go_spark.datareader import read_files_with_pv, scan_paths
     from delta_go_spark.snapshot import canonicalize_path
 
     table_path = normalize_table_uri(table_path)
     log = DeltaLog.for_table(table_path)
-    snap = log.update()
-    schema = snap.metadata().schema()
-    from delta_go_spark.datacache import cache_path, is_cloud_uri
-    from delta_go_spark.datacloud import use_native_cloud
-
-    cloud = is_cloud_uri(table_path)
-    native = cloud and use_native_cloud(spark, table_path)
-    added: list[AddFile] = []
-    version_of: dict[str, int] = {}
+    meta = log.update().metadata()
+    # canonical path -> (partitionValues, latest version that added it)
+    added: dict[str, tuple[dict, int]] = {}
     for vlog in log.changes(start_version):
         for action in vlog.actions:
             if isinstance(action, AddFile) and action.data_change:
-                p = canonicalize_path(action.path, table_path)
-                # key by the path the scan reads (the remote URI when a
-                # connector serves it, the local cache entry otherwise)
-                if cloud:
-                    p = p if native else cache_path(p)
-                else:
-                    p = p.replace("file://", "")
-                if p not in version_of:
-                    added.append(action)
-                version_of[p] = vlog.version
-    if not added:
-        return spark.createDataFrame([], schema).withColumn(
-            "_commit_version", F.lit(0).cast("long")
-        )
-    from delta_go_spark.cdf import _with_version
-
-    df = files_to_df(spark, snap, added)
-    return _with_version(df, version_of)
+                added[canonicalize_path(action.path, table_path)] = (
+                    action.partition_values or {},
+                    vlog.version,
+                )
+    paths = scan_paths(spark, table_path, list(added), log.store)
+    return read_files_with_pv(
+        spark,
+        meta.schema(),
+        meta.partition_columns,
+        [(p, pv) for p, (pv, _) in zip(paths, added.values())],
+        [v for _, v in added.values()],
+    )
 
 
 def cleanup_expired_logs(log: DeltaLog, retention_millis: int | None = None) -> list[str]:

@@ -226,38 +226,117 @@ def test_streaming_change_feed(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == 3
 
 
+# Partition values whose Hive directory names and Hadoop URIs differ from
+# the log's string: a space, non-ASCII, a literal percent escape, a plus.
+_PV_MATRIX = ["plain", "a b", "Zürich", "São Paulo", "x%20y", "p+q"]
+
+
 def test_cdf_partition_value_with_space(spark, tmp_path):
-    """input_file_name() returns percent-encoded URIs; a partition value
-    containing a space must still resolve its _commit_version (the mapping
-    is keyed under the encoded spelling too)."""
+    """Every Spark read maps a row's reported file name back to its log
+    file: to_df, a DELETE by a data-column predicate, MERGE, changes_df and
+    table_changes give the right rows, each row's partition value, and a
+    non-null, correct _commit_version for every value in _PV_MATRIX."""
     path = str(tmp_path / "tcdfspace")
+    n = len(_PV_MATRIX)
     df = spark.createDataFrame(
-        [(1, "north america"), (2, "south america"), (3, "north america")],
-        "k long, region string",
-    )
+        [(2 * i + j, j, c) for i, c in enumerate(_PV_MATRIX) for j in (0, 1)],
+        "k long, v long, city string",
+    ).coalesce(1)  # one file per partition value
     DeltaTable.create(
-        spark, path, df, partition_by=["region"],
+        spark, path, df, partition_by=["city"],
         configuration={"delta.enableChangeDataFeed": "true"},
     )
     t = DeltaTable.for_path(spark, path)
-    t.update(EqualTo(Column("k", LongType()), Literal(1)), {"k": F.lit(10).cast("long")})
+    city_of = {2 * i + j: c for i, c in enumerate(_PV_MATRIX) for j in (0, 1)}
+    assert {(r["k"], r["city"]) for r in t.to_df().collect()} == set(city_of.items())
+
+    # v1: every file holds one matching row, so every file is rewritten
+    t.delete(EqualTo(Column("v", LongType()), Literal(1)))
+    survivors = {k: c for k, c in city_of.items() if k % 2 == 0}
+    assert {(r["k"], r["city"]) for r in t.to_df().collect()} == set(survivors.items())
+
+    # v2: matched keys update in every partition, one insert per partition
+    src = spark.createDataFrame(
+        [(2 * i, 7, c) for i, c in enumerate(_PV_MATRIX)]
+        + [(100 + i, 8, c) for i, c in enumerate(_PV_MATRIX)],
+        "k long, v long, city string",
+    )
+    t.merge(src, "k", update_set={"v": F.col("_s_v")})
+    final = {**survivors, **{100 + i: c for i, c in enumerate(_PV_MATRIX)}}
+    got = {(r["k"], r["v"], r["city"]) for r in t.to_df().collect()}
+    assert got == {(k, 7 if k < 100 else 8, c) for k, c in final.items()}
+
+    # changes_df: rows of every added file, with the version that added it
+    added = {(r["k"], r["city"], r["_commit_version"]) for r in t.changes_df(0).collect()}
+    assert added == (
+        {(k, c, 0) for k, c in city_of.items()}
+        | {(k, c, 1) for k, c in survivors.items()}
+        | {(k, c, 2) for k, c in final.items()}
+    )
+
     changes = t.table_changes(start_version=0).collect()
     assert changes and all(r["_commit_version"] is not None for r in changes)
-    v = t.log.update().version
-    got = {(r["_change_type"], r["k"]) for r in changes if r["_commit_version"] == v}
-    assert got == {("update_preimage", 1), ("update_postimage", 10)}
+    got = {(r["_change_type"], r["k"], r["city"], r["_commit_version"]) for r in changes}
+    assert got == (
+        {("insert", k, c, 0) for k, c in city_of.items()}
+        | {("delete", k, c, 1) for k, c in city_of.items() if k % 2 == 1}
+        | {("update_preimage", 2 * i, c, 2) for i, c in enumerate(_PV_MATRIX)}
+        | {("update_postimage", 2 * i, c, 2) for i, c in enumerate(_PV_MATRIX)}
+        | {("insert", 100 + i, c, 2) for i, c in enumerate(_PV_MATRIX)}
+    )
+    assert len(changes) == 6 * n  # no row is reported twice
+
+
+def test_table_changes_reads_percent_partition_value(spark, tmp_path):
+    """A partition value holding a literal percent escape: the file sits
+    under `p=x%2520y` on disk, and the file-level change feed (no cdc
+    files) must read it there, not at a twice-decoded `p=x%20y`."""
+    path = str(tmp_path / "tcdfpct")
+    DeltaTable.create(
+        spark, path,
+        spark.createDataFrame([(1, "x%20y"), (2, "plain")], "k long, p string"),
+        partition_by=["p"],
+    )
+    t = DeltaTable.for_path(spark, path)
+    t.delete(EqualTo(Column("k", LongType()), Literal(1)))
+    got = {
+        (r["_change_type"], r["k"], r["p"], r["_commit_version"])
+        for r in t.table_changes(start_version=0).collect()
+    }
+    assert got == {
+        ("insert", 1, "x%20y", 0),
+        ("insert", 2, "plain", 0),
+        ("delete", 1, "x%20y", 1),
+    }
 
 
 def test_cdf_version_plan_size_constant_in_file_count(spark, tmp_path):
-    """The version-attribution plan must not grow with the number of
-    changed files: 1000 entries stay a broadcast relation (data), never a
-    create_map literal (plan).  A month-long CDF range at 100 TB touches
-    millions of files — a literal map would stall Catalyst."""
-    from delta_go_spark.cdf import _with_version
+    """The per-file values (partition values, _commit_version) must not
+    grow the plan with the number of changed files: 1000 files stay a
+    broadcast relation (data), never a create_map literal (plan).  A
+    month-long CDF range at 100 TB touches millions of files — a literal
+    map would stall Catalyst."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
 
-    df = spark.range(3).selectExpr("id AS k")
-    small = _with_version(df, {f"/tmp/f{i}.parquet": i for i in range(2)})
-    big = _with_version(df, {f"/tmp/f{i}.parquet": i for i in range(1000)})
+    from delta_go_spark.datareader import read_files_with_pv
+
+    files = []
+    for i in range(1000):
+        d = tmp_path / f"p=v{i % 7}"
+        d.mkdir(exist_ok=True)
+        f = str(d / f"f{i}.parquet")
+        pq.write_table(pa.table({"k": [i]}), f)
+        files.append((f, {"p": f"v{i % 7}"}))
+    schema = StructType.fromJson(
+        {"type": "struct", "fields": [
+            {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+            {"name": "p", "type": "string", "nullable": True, "metadata": {}},
+        ]}
+    )
+    small = read_files_with_pv(spark, schema, ["p"], files[:2], [0, 1])
+    big = read_files_with_pv(spark, schema, ["p"], files, list(range(1000)))
     small_plan = small._jdf.queryExecution().analyzed().toString()
     big_plan = big._jdf.queryExecution().analyzed().toString()
     assert "create_map" not in big_plan
@@ -265,6 +344,8 @@ def test_cdf_version_plan_size_constant_in_file_count(spark, tmp_path):
     assert len(big_plan) < len(small_plan) + 2000
     optimized = big._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" in optimized or "broadcast" in optimized.lower()
+    got = big.filter("k = 500").collect()
+    assert [(r["k"], r["p"], r["_commit_version"]) for r in got] == [(500, "v3", 500)]
 
 
 def test_sql_table_changes_tvf(spark, tmp_path):

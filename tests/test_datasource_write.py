@@ -242,3 +242,36 @@ def test_write_partition_column_case_insensitive(spark, tmp_path):
     got = spark.read.format("delta_go").load(path)
     assert got.count() == 2
     assert got.filter(F.col("p") == "b").count() == 1
+
+
+def test_timestamp_partition_roundtrip_both_readers(spark, tmp_path):
+    """A microsecond timestamp partition written by format("delta_go") is
+    recorded in the protocol form `YYYY-MM-DD HH:MM:SS.ffffff` and reads
+    back equal through both readers, including a read pruned on it."""
+    import datetime
+
+    path = str(tmp_path / "w7")
+    ts = [
+        datetime.datetime(2024, 3, 1, 12, 30, 45, 123456),
+        datetime.datetime(2024, 3, 2, 0, 0, 0),
+    ]
+    spark.createDataFrame(
+        [(1, ts[0]), (2, ts[1])], "k long, ts timestamp"
+    ).write.format("delta_go").option("partitionBy", "ts").mode(
+        "append"
+    ).save(path)
+    want = {(1, ts[0]), (2, ts[1])}
+    ds = spark.read.format("delta_go").load(path)
+    assert {(r["k"], r["ts"]) for r in ds.collect()} == want
+    facade = DeltaTable.for_path(spark, path).to_df()
+    assert {(r["k"], r["ts"]) for r in facade.collect()} == want
+    pruned = ds.filter(F.col("ts") == F.lit(ts[0]))
+    assert [(r["k"], r["ts"]) for r in pruned.collect()] == [(1, ts[0])]
+    t = DeltaTable.for_path(spark, path)
+    pred = t.parse_predicate("ts = '2024-03-01 12:30:45.123456'")
+    assert [r["k"] for r in t.to_df(pred).collect()] == [1]
+    snap = DeltaLog.for_table(path).update()
+    assert {a.partition_values["ts"] for a in snap.all_files()} == {
+        "2024-03-01 12:30:45.123456",
+        "2024-03-02 00:00:00",
+    }
