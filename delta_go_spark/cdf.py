@@ -166,11 +166,7 @@ def table_changes(
 
     def read(group: dict[str, tuple[dict, int]], read_schema, read_pcols):
         return read_files_with_pv(
-            spark,
-            read_schema,
-            read_pcols,
-            [(p, pv) for p, (pv, _) in group.items()],
-            [v for _, v in group.values()],
+            spark, read_schema, read_pcols, group, versioned=True
         )
 
     parts: list[DataFrame] = []
@@ -192,8 +188,7 @@ def table_changes(
         )
 
     if not parts:
-        empty = spark.createDataFrame([], out_schema)
-        return empty.withColumn(COMMIT_VERSION_COL, F.lit(0).cast("long"))
+        parts.append(read({}, out_schema, []))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

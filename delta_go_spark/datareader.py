@@ -13,6 +13,9 @@ that knows a data file's identity on both sides of the boundary:
   canonical source per the Delta protocol) and, for change feeds,
   `_commit_version` — attached by ONE broadcast join on `file_name()`:
   O(#files) broadcast data, O(1) plan, zero extra shuffle of data rows.
+- `scan_files` / `read_scan`: a snapshot's files keyed by scan path,
+  resolved once, so DML and MERGE map the `file_name()` values a job
+  collects back to AddFiles by lookup, with no second resolution.
 
 DML, MERGE, changes_df and table_changes all go through these, so a
 partition value with a space, non-ASCII, '%' or '+' resolves the same way
@@ -27,7 +30,7 @@ against the true types.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,35 +84,36 @@ def read_files_with_pv(
     spark: SparkSession,
     schema: StructType,
     pcols: list[str],
-    files: list[tuple[str, dict]],
-    versions: list[int] | None = None,
+    files: Mapping[str, dict] | Mapping[str, tuple[dict, int]],
+    versioned: bool = False,
 ) -> DataFrame:
-    """One scan over (scan path, partitionValues) pairs, with partition
+    """One scan over `files` (scan path -> partitionValues), with partition
     columns injected from the supplied values — the log is the canonical
-    source per the Delta protocol.  With `versions` (one per file), the
-    result also carries a `_commit_version` column from the same join."""
+    source per the Delta protocol.  `versioned` files map each scan path
+    to (partitionValues, commit version), and the result also carries a
+    `_commit_version` column from the same join."""
     out_schema = schema
-    if versions is not None:
+    if versioned:
         out_schema = StructType(
             [*schema.fields, StructField(COMMIT_VERSION_COL, LongType())]
         )
-    paths = [p for p, _ in files]
-    if not paths:
+    if not files:
         return spark.createDataFrame([], out_schema)
-    if not pcols and versions is None:
-        return spark.read.schema(schema).parquet(*paths)
+    if not pcols and not versioned:
+        return spark.read.schema(schema).parquet(*files)
 
-    df = spark.read.schema(_data_schema(schema, pcols)).parquet(*paths)
+    df = spark.read.schema(_data_schema(schema, pcols)).parquet(*files)
 
     # (decoded scan path -> per-file values) broadcast mapping: the mapping
     # is data, not plan, so the plan stays O(1) however many files
-    rows = [(p, *[(pv or {}).get(c) for c in pcols]) for p, pv in files]
     fields = [StructField("_pv_file", StringType(), False)] + [
         StructField(f"_pv_{c}", StringType(), True) for c in pcols
     ]
-    if versions is not None:
-        rows = [(*r, v) for r, v in zip(rows, versions)]
+    if versioned:
+        rows = [(p, *[(pv or {}).get(c) for c in pcols], v) for p, (pv, v) in files.items()]
         fields.append(StructField(COMMIT_VERSION_COL, LongType(), True))
+    else:
+        rows = [(p, *[(pv or {}).get(c) for c in pcols]) for p, pv in files.items()]
     pv_df = spark.createDataFrame(rows, StructType(fields))
 
     field_by_lower = {f.name.lower(): f for f in schema.fields}
@@ -123,37 +127,36 @@ def read_files_with_pv(
     return df.select(*[f.name for f in out_schema.fields])
 
 
-def files_to_df(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -> DataFrame:
-    meta = snapshot.metadata()
-    schema = meta.schema()
-    if schema is None:
-        raise ValueError("snapshot has no schema")
-    paths = _scan_paths_of(spark, snapshot, files)
-    return read_files_with_pv(
-        spark,
-        schema,
-        meta.partition_columns,
-        [(p, a.partition_values or {}) for a, p in zip(files, paths)],
-    )
-
-
-def _scan_paths_of(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -> list[str]:
+def scan_files(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -> dict[str, AddFile]:
+    """`files` keyed by their scan paths, resolved once: a DML job reads
+    them with `read_scan` and maps the `file_name()` values it collects
+    back to AddFiles by plain lookup, with no second resolution."""
     root = snapshot.table_root
-    return scan_paths(
+    paths = scan_paths(
         spark,
         root,
         [canonicalize_path(a.path, root) for a in files],
         getattr(snapshot, "store", None),
     )
+    return dict(zip(paths, files))
 
 
-def files_named(
-    spark: SparkSession, snapshot: Snapshot, files: list[AddFile], names: Iterable[str]
-) -> list[AddFile]:
-    """The entries of `files` (the files a scan over the same snapshot
-    read) whose scan path is among `names`, values of `file_name()`."""
-    names = set(names)
-    return [a for a, p in zip(files, _scan_paths_of(spark, snapshot, files)) if p in names]
+def read_scan(spark: SparkSession, snapshot: Snapshot, scan: dict[str, AddFile]) -> DataFrame:
+    """One scan over a `scan_files` result, as `files_to_df` reads it."""
+    meta = snapshot.metadata()
+    schema = meta.schema()
+    if schema is None:
+        raise ValueError("snapshot has no schema")
+    return read_files_with_pv(
+        spark,
+        schema,
+        meta.partition_columns,
+        {p: a.partition_values or {} for p, a in scan.items()},
+    )
+
+
+def files_to_df(spark: SparkSession, snapshot: Snapshot, files: list[AddFile]) -> DataFrame:
+    return read_scan(spark, snapshot, scan_files(spark, snapshot, files))
 
 
 def snapshot_to_df(snapshot: Snapshot, spark: SparkSession) -> DataFrame:

@@ -10,9 +10,9 @@ compute engine, Spark-first:
   scan and collecting each matching row's file — one Spark job that reads
   only candidate files and returns a small path list to the driver
   (O(#files), not rows).  datareader.py owns both halves of that match:
-  which path the scan reads for a log file (`files_named`) and how Spark's
-  reported file name decodes back to it (`file_name`); this module never
-  spells a path itself.
+  which path the scan reads for a log file (`scan_files`, resolved once
+  per job) and how Spark's reported file name decodes back to it
+  (`file_name`); this module never spells a path itself.
 - Rewrites read ONLY touched files, apply the row transform, and stage new
   parquet; the commit removes touched files and adds rewritten ones in one
   atomic transaction with the proper operation name, protected by
@@ -81,11 +81,12 @@ def _touched_paths(
     Returns (touched AddFiles, DataFrame over exactly those files).  The
     match test is one aggregate over datareader.file_name() — reads
     candidate files once, returns only distinct paths to the driver."""
-    from delta_go_spark.datareader import file_name, files_named, files_to_df
+    from delta_go_spark.datareader import file_name, read_scan, scan_files
 
     if not candidates:
         return [], None
-    df = files_to_df(spark, snapshot, candidates)
+    scan = scan_files(spark, snapshot, candidates)
+    df = read_scan(spark, snapshot, scan)
     # toLocalIterator streams one partition of distinct paths at a time, so
     # the driver never holds a second materialized copy of the path list —
     # on a 100 TB table with millions of matched files the set itself is
@@ -97,10 +98,11 @@ def _touched_paths(
         .distinct()
         .toLocalIterator()
     )
-    touched = files_named(spark, snapshot, candidates, (r["_f"] for r in matched_rows))
+    names = {r["_f"] for r in matched_rows}
+    touched = {p: a for p, a in scan.items() if p in names}
     if not touched:
         return [], None
-    return touched, files_to_df(spark, snapshot, touched)
+    return list(touched.values()), read_scan(spark, snapshot, touched)
 
 
 class DeltaDml:
@@ -520,9 +522,10 @@ class DeltaDml:
         else:
             key_counts = None
             keys = source.select(on).distinct()
-        from delta_go_spark.datareader import file_name, files_named, files_to_df
+        from delta_go_spark.datareader import file_name, read_scan, scan_files
 
-        target_df = files_to_df(self.spark, snap, candidates) if candidates else None
+        scan = scan_files(self.spark, snap, candidates) if candidates else {}
+        target_df = read_scan(self.spark, snap, scan) if scan else None
         # One measured size estimate for the source batch, shared by every
         # broadcast site below (the key frames are column-subsets of the
         # source, so the full-source estimate upper-bounds them): an
@@ -543,7 +546,7 @@ class DeltaDml:
             src_est_bytes = (
                 estimated_df_bytes(source) if target_df is not None else 0
             )
-        touched: list[AddFile] = []
+        touched: dict[str, AddFile] = {}
         if target_df is not None:
             # The file name must bind to the TARGET scan before the join:
             # selected after it, Spark rejects the file-name expression as
@@ -556,16 +559,15 @@ class DeltaDml:
                 .distinct()
                 .toLocalIterator()
             )
-            touched = files_named(
-                self.spark, snap, candidates, (r["_f"] for r in semi)
-            )
+            names = {r["_f"] for r in semi}
+            touched = {p: a for p, a in scan.items() if p in names}
         pcols = snap.metadata().partition_columns
         clock_ms = log.clock.now_millis()
         cdf = _cdf_enabled(snap)
         actions: list = []
 
         if touched:
-            tdf = files_to_df(self.spark, snap, touched)
+            tdf = read_scan(self.spark, snap, touched)
             if cdf or _has_constraints(snap):
                 tdf = tdf.persist()  # rewrite/constraints/cdc share one scan
             try:
@@ -698,7 +700,7 @@ class DeltaDml:
                         )
                     rewritten = rewritten.select(*tdf.columns)
                 actions.extend(stage_files(rewritten, self.table_path, pcols))
-                actions.extend(a.remove(clock_ms) for a in touched)
+                actions.extend(a.remove(clock_ms) for a in touched.values())
             finally:
                 # unpersist even when a constraint rejection aborts the
                 # merge — otherwise the cached frame leaks for the session
@@ -708,9 +710,7 @@ class DeltaDml:
         if insert_not_matched:
             schema_cols = [f.name for f in snap.metadata().schema().fields]
             existing_keys = (
-                files_to_df(self.spark, snap, candidates).select(on).distinct()
-                if candidates
-                else None
+                target_df.select(on).distinct() if target_df is not None else None
             )
             new_rows = source
             if delete_condition is not None:

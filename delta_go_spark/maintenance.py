@@ -162,8 +162,8 @@ def changes_df(
         spark,
         meta.schema(),
         meta.partition_columns,
-        [(p, pv) for p, (pv, _) in zip(paths, added.values())],
-        [v for _, v in added.values()],
+        dict(zip(paths, added.values())),
+        versioned=True,
     )
 
 

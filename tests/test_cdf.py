@@ -233,9 +233,10 @@ _PV_MATRIX = ["plain", "a b", "Zürich", "São Paulo", "x%20y", "p+q"]
 
 def test_cdf_partition_value_with_space(spark, tmp_path):
     """Every Spark read maps a row's reported file name back to its log
-    file: to_df, a DELETE by a data-column predicate, MERGE, changes_df and
-    table_changes give the right rows, each row's partition value, and a
-    non-null, correct _commit_version for every value in _PV_MATRIX."""
+    file: to_df, a DELETE by a data-column predicate, an UPDATE, MERGE,
+    changes_df and table_changes give the right rows, each row's partition
+    value, and a non-null, correct _commit_version for every value in
+    _PV_MATRIX."""
     path = str(tmp_path / "tcdfspace")
     n = len(_PV_MATRIX)
     df = spark.createDataFrame(
@@ -255,7 +256,12 @@ def test_cdf_partition_value_with_space(spark, tmp_path):
     survivors = {k: c for k, c in city_of.items() if k % 2 == 0}
     assert {(r["k"], r["city"]) for r in t.to_df().collect()} == set(survivors.items())
 
-    # v2: matched keys update in every partition, one insert per partition
+    # v2: every surviving row (v = 0, even k) updates in every partition
+    t.update(EqualTo(Column("v", LongType()), Literal(0)), {"v": F.lit(5).cast("long")})
+    got = {(r["k"], r["v"], r["city"]) for r in t.to_df().collect()}
+    assert got == {(k, 5, c) for k, c in survivors.items()}
+
+    # v3: matched keys update in every partition, one insert per partition
     src = spark.createDataFrame(
         [(2 * i, 7, c) for i, c in enumerate(_PV_MATRIX)]
         + [(100 + i, 8, c) for i, c in enumerate(_PV_MATRIX)],
@@ -267,24 +273,33 @@ def test_cdf_partition_value_with_space(spark, tmp_path):
     assert got == {(k, 7 if k < 100 else 8, c) for k, c in final.items()}
 
     # changes_df: rows of every added file, with the version that added it
-    added = {(r["k"], r["city"], r["_commit_version"]) for r in t.changes_df(0).collect()}
+    added = {
+        (r["k"], r["v"], r["city"], r["_commit_version"])
+        for r in t.changes_df(0).collect()
+    }
     assert added == (
-        {(k, c, 0) for k, c in city_of.items()}
-        | {(k, c, 1) for k, c in survivors.items()}
-        | {(k, c, 2) for k, c in final.items()}
+        {(k, k % 2, c, 0) for k, c in city_of.items()}
+        | {(k, 0, c, 1) for k, c in survivors.items()}
+        | {(k, 5, c, 2) for k, c in survivors.items()}
+        | {(k, 7 if k < 100 else 8, c, 3) for k, c in final.items()}
     )
 
     changes = t.table_changes(start_version=0).collect()
     assert changes and all(r["_commit_version"] is not None for r in changes)
-    got = {(r["_change_type"], r["k"], r["city"], r["_commit_version"]) for r in changes}
+    got = {
+        (r["_change_type"], r["k"], r["v"], r["city"], r["_commit_version"])
+        for r in changes
+    }
     assert got == (
-        {("insert", k, c, 0) for k, c in city_of.items()}
-        | {("delete", k, c, 1) for k, c in city_of.items() if k % 2 == 1}
-        | {("update_preimage", 2 * i, c, 2) for i, c in enumerate(_PV_MATRIX)}
-        | {("update_postimage", 2 * i, c, 2) for i, c in enumerate(_PV_MATRIX)}
-        | {("insert", 100 + i, c, 2) for i, c in enumerate(_PV_MATRIX)}
+        {("insert", k, k % 2, c, 0) for k, c in city_of.items()}
+        | {("delete", k, 1, c, 1) for k, c in city_of.items() if k % 2 == 1}
+        | {("update_preimage", k, 0, c, 2) for k, c in survivors.items()}
+        | {("update_postimage", k, 5, c, 2) for k, c in survivors.items()}
+        | {("update_preimage", k, 5, c, 3) for k, c in survivors.items()}
+        | {("update_postimage", k, 7, c, 3) for k, c in survivors.items()}
+        | {("insert", 100 + i, 8, c, 3) for i, c in enumerate(_PV_MATRIX)}
     )
-    assert len(changes) == 6 * n  # no row is reported twice
+    assert len(changes) == 8 * n  # no row is reported twice
 
 
 def test_table_changes_reads_percent_partition_value(spark, tmp_path):
@@ -328,15 +343,15 @@ def test_cdf_version_plan_size_constant_in_file_count(spark, tmp_path):
         d.mkdir(exist_ok=True)
         f = str(d / f"f{i}.parquet")
         pq.write_table(pa.table({"k": [i]}), f)
-        files.append((f, {"p": f"v{i % 7}"}))
+        files.append((f, ({"p": f"v{i % 7}"}, i)))
     schema = StructType.fromJson(
         {"type": "struct", "fields": [
             {"name": "k", "type": "long", "nullable": True, "metadata": {}},
             {"name": "p", "type": "string", "nullable": True, "metadata": {}},
         ]}
     )
-    small = read_files_with_pv(spark, schema, ["p"], files[:2], [0, 1])
-    big = read_files_with_pv(spark, schema, ["p"], files, list(range(1000)))
+    small = read_files_with_pv(spark, schema, ["p"], dict(files[:2]), versioned=True)
+    big = read_files_with_pv(spark, schema, ["p"], dict(files), versioned=True)
     small_plan = small._jdf.queryExecution().analyzed().toString()
     big_plan = big._jdf.queryExecution().analyzed().toString()
     assert "create_map" not in big_plan
