@@ -11,8 +11,14 @@ that knows a data file's identity on both sides of the boundary:
   percent-encoded Hadoop URI) decoded back to that scan path.
 - `read_files_with_pv`: per-file values — the LOG's partitionValues (the
   canonical source per the Delta protocol) and, for change feeds,
-  `_commit_version` — attached by ONE broadcast join on `file_name()`:
-  O(#files) broadcast data, O(1) plan, zero extra shuffle of data rows.
+  `_commit_version` — attached by ONE broadcast join.  The scan path ->
+  values mapping is a driver-local Arrow relation (a LocalRelation: no
+  Spark job and no Python worker per query), so the broadcast carries
+  O(#files) data while the plan stays O(1), with no extra shuffle of data
+  rows.  The join key is the scan's `_metadata.file_path`, decoded by the
+  same rule as `file_name`: a deterministic column, so Catalyst pushes
+  data filters through it into the parquet scan (row-group skipping),
+  which the nondeterministic input_file_name() would stop.
 - `scan_files` / `read_scan`: a snapshot's files keyed by scan path,
   resolved once, so DML and MERGE map the `file_name()` values a job
   collects back to AddFiles by lookup, with no second resolution.
@@ -32,8 +38,10 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from delta_go_spark.actions import AddFile
@@ -66,18 +74,34 @@ def scan_paths(
     return localize(canonical, store)
 
 
-def file_name() -> Column:
-    """The current row's file, as the path `scan_paths` gave the scan.
+def _decode_file_uri(uri: Column) -> Column:
+    """A scan's reported file URI decoded back to the path `scan_paths`
+    gave the scan.
 
-    input_file_name() reports a percent-encoded URI (a space is %20, '%'
-    is %25, non-ASCII stays literal): strip the file: scheme, collapse the
+    Spark reports a percent-encoded URI (a space is %20, '%' is %25,
+    non-ASCII stays literal): strip the file: scheme, collapse the
     authority slashes and %-decode, escaping '+' first, which url_decode
     would otherwise turn into a space."""
     return F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.input_file_name(), "^file:/+", "/"), r"\+", "%2B"
-        )
+        F.regexp_replace(F.regexp_replace(uri, "^file:/+", "/"), r"\+", "%2B")
     )
+
+
+def file_name() -> Column:
+    """The current row's file, as the path `scan_paths` gave the scan."""
+    return _decode_file_uri(F.input_file_name())
+
+
+def _local_df(spark: SparkSession, schema: StructType, columns: list[list]) -> DataFrame:
+    """`columns` (one list per field of `schema`) as a driver-local
+    relation: an Arrow table becomes a LocalRelation, which Spark plans as
+    a LocalTableScan with no job and no Python worker."""
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_files_with_pv(
@@ -91,33 +115,39 @@ def read_files_with_pv(
     columns injected from the supplied values — the log is the canonical
     source per the Delta protocol.  `versioned` files map each scan path
     to (partitionValues, commit version), and the result also carries a
-    `_commit_version` column from the same join."""
+    `_commit_version` column from the same join.
+
+    The mapping is one driver-local Arrow relation (string partition
+    values, int64 versions) broadcast-joined on the scan's decoded
+    `_metadata.file_path`: its size is data, not plan, building it runs
+    no Spark job, and data filters above the result still reach the
+    parquet scan's PushedFilters."""
     out_schema = schema
     if versioned:
         out_schema = StructType(
             [*schema.fields, StructField(COMMIT_VERSION_COL, LongType())]
         )
     if not files:
-        return spark.createDataFrame([], out_schema)
+        return _local_df(spark, out_schema, [[] for _ in out_schema.fields])
     if not pcols and not versioned:
         return spark.read.schema(schema).parquet(*files)
 
     df = spark.read.schema(_data_schema(schema, pcols)).parquet(*files)
 
-    # (decoded scan path -> per-file values) broadcast mapping: the mapping
-    # is data, not plan, so the plan stays O(1) however many files
     fields = [StructField("_pv_file", StringType(), False)] + [
         StructField(f"_pv_{c}", StringType(), True) for c in pcols
     ]
+    entries = list(files.values())
+    pvs = [pv for pv, _ in entries] if versioned else entries
+    columns = [list(files), *[[(pv or {}).get(c) for pv in pvs] for c in pcols]]
     if versioned:
-        rows = [(p, *[(pv or {}).get(c) for c in pcols], v) for p, (pv, v) in files.items()]
         fields.append(StructField(COMMIT_VERSION_COL, LongType(), True))
-    else:
-        rows = [(p, *[(pv or {}).get(c) for c in pcols]) for p, pv in files.items()]
-    pv_df = spark.createDataFrame(rows, StructType(fields))
+        columns.append([v for _, v in entries])
+    pv_df = _local_df(spark, StructType(fields), columns)
 
     field_by_lower = {f.name.lower(): f for f in schema.fields}
-    df = df.withColumn("_pv_file", file_name()).join(
+    key = _decode_file_uri(df.metadataColumn("_metadata")["file_path"])
+    df = df.withColumn("_pv_file", key).join(
         F.broadcast(pv_df), on="_pv_file", how="left"
     )
     for c in pcols:

@@ -185,7 +185,6 @@ def _arrow_batches_for_file(
     pset = {c.lower() for c in partition_cols}
     pv_lower = {k.lower(): v for k, v in (partition_values or {}).items()}
 
-    data_fields = [f for f in schema.fields if f.name.lower() not in pset]
     table = pq.read_table(
         abs_path,
         columns=None,
@@ -199,7 +198,7 @@ def _arrow_batches_for_file(
         if field.name.lower() in pset:
             raw = pv_lower.get(field.name.lower())
             value = E.parse_partition_value(raw, field.dataType)
-            columns.append(pa.nulls(n, target) if value is None else pa.array([value] * n, type=target))
+            columns.append(pa.repeat(pa.scalar(value, type=target), n))
         elif field.name.lower() in file_cols:
             col = table.column(file_cols[field.name.lower()])
             if col.type != target:
@@ -208,7 +207,6 @@ def _arrow_batches_for_file(
         else:
             # File predates an ADD COLUMNS evolution: fill with nulls.
             columns.append(pa.nulls(n, target))
-    del data_fields  # order handled by iterating schema.fields above
     out = pa.table(columns, schema=arrow_schema)
     yield from out.to_batches()
 

@@ -2,6 +2,8 @@
 against DuckDB over the same parquet files; partition-value injection from
 the log for partitioned tables."""
 
+import re
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -130,3 +132,65 @@ def test_sql_context_time_travel(spark, tmp_path):
         """
     ).first()["n"]
     assert grew == 5
+
+
+def test_data_filters_reach_partitioned_scan(spark, tmp_path):
+    """A data-column range above the partition-value join is pushed into
+    the parquet scan, so row-group skipping can engage: the join key is
+    the scan's deterministic `_metadata.file_path`, not input_file_name(),
+    which Catalyst will not push a filter through."""
+    from pyspark.sql.types import IntegerType, LongType
+
+    from delta_go_spark.expressions import And, Column, EqualTo, GreaterThanOrEq, LessThan, Literal
+    from delta_go_spark.table import DeltaTable
+    from delta_go_spark.writer import write_dataframe
+
+    path = str(tmp_path / "pushdown")
+    src = spark.range(0, 4000).select(
+        F.col("id").alias("k"), (F.col("id") % 4).cast("int").alias("y")
+    )
+    write_dataframe(src.repartition("y"), path, "append", partition_by=["y"])
+    k = Column("k", LongType())
+    pred = And(
+        EqualTo(Column("y", IntegerType()), Literal(3)),
+        And(GreaterThanOrEq(k, Literal(1000)), LessThan(k, Literal(2000))),
+    )
+    df = DeltaTable.for_path(spark, path).to_df(pred)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (pushed,) = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert "GreaterThanOrEqual(k,1000)" in pushed and "LessThan(k,2000)" in pushed
+    got = df.agg(F.count(F.lit(1)), F.sum("k"), F.min("y"), F.max("y")).first()
+    want = [i for i in range(1000, 2000) if i % 4 == 3]
+    assert tuple(got) == (len(want), sum(want), 3, 3)
+
+
+@pytest.mark.parametrize("kind", ["empty", "partitioned", "versioned"])
+def test_per_file_values_are_a_local_relation(spark, tmp_path, kind):
+    """read_files_with_pv builds its per-file mapping (and an empty read)
+    on the driver: the optimized plan holds a LocalRelation and no RDD
+    scan, so no Spark job or Python worker runs to build it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from delta_go_spark.datareader import read_files_with_pv
+
+    files = {}
+    if kind != "empty":
+        for i, p in enumerate(["a b", "c"]):
+            d = tmp_path / f"p={p}"
+            d.mkdir()
+            f = str(d / "f.parquet")
+            pq.write_table(pa.table({"k": pa.array([i], pa.int64())}), f)
+            files[f] = ({"p": p}, 10 + i) if kind == "versioned" else {"p": p}
+    schema = StructType([StructField("k", LongType()), StructField("p", StringType())])
+    df = read_files_with_pv(spark, schema, ["p"], files, versioned=kind == "versioned")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan
+    want = {
+        "empty": [],
+        "partitioned": [(0, "a b"), (1, "c")],
+        "versioned": [(0, "a b", 10), (1, "c", 11)],
+    }[kind]
+    assert sorted(tuple(r) for r in df.collect()) == want
